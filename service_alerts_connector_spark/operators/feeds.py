@@ -3,21 +3,23 @@
 The reference enumerates 24 feed configs = {all, 7days, current} ×
 {planned, unplanned} × {v0, v1, v1.1, v1.2} in Python lists
 (ServiceAlertBroadcaster.py:51-59) and loops them.  The engine keeps the
-configs as *data* and fans out lightweight ``filter().select()`` plans from
-one cached gold scan — Catalyst reuses the scan across all 24 plans, so the
-fan-out costs one pass over gold regardless of feed count.
+configs as *data*.  ``feed_records`` serves every config from one
+projection of gold — the planned flag, one boolean per time window and one
+rendered JSON record per API version — collected in a single Spark job; the
+per-feed filters then run on the driver.  ``feed_dataframe`` is the
+per-config plan those feeds must equal.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 from datetime import datetime
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from service_alerts_connector_spark.schemas import API_VERSION_COLS
+from service_alerts_connector_spark.sources.json_feed import json_record
 
 # Reference ServiceAlertBroadcaster.py:51-59.
 WINDOWS = ("all", "7days", "current")
@@ -92,11 +94,44 @@ def feed_dataframe(
     )
 
 
-def generate_feeds(
-    gold: DataFrame, now: datetime, configs: list[FeedConfig] | None = None
-) -> Iterator[tuple[FeedConfig, DataFrame]]:
-    """Yield (config, filtered DataFrame) pairs off one cached gold scan
-    (reference generator at ServiceAlertBroadcaster.py:78-98)."""
-    gold = gold.cache()
-    for cfg in configs or all_feed_configs():
-        yield cfg, feed_dataframe(gold, cfg, now)
+def feed_records(
+    gold: DataFrame, now: datetime, configs: list[FeedConfig]
+) -> dict[FeedConfig, list[str]]:
+    """Every config's feed as rendered JSON records (``json_record``), from
+    one collect of gold.  Each list keeps gold's collect order, so its
+    ``json_array`` equals ``dataframe_to_json_records(feed_dataframe(gold,
+    cfg, now))``.
+
+    The ``all`` flag is ``expiry_date IS NOT NULL``: every non-null expiry
+    is above ``time_window_predicate``'s min(expiry) − 1 day anchor and a
+    null one compares false.  With no expiry at all that predicate is
+    ``lit(True)``, so the ``all`` feeds then keep every row.
+    """
+    windows = list(dict.fromkeys(c.window for c in configs))
+    versions = list(dict.fromkeys(c.version for c in configs))
+    flags = [
+        F.col("expiry_date").isNotNull()
+        if w == "all"
+        else F.coalesce(time_window_predicate(gold, w, now), F.lit(False))
+        for w in windows
+    ]
+    renders = [
+        json_record([c for c in API_VERSION_COLS[v] if c in gold.columns])
+        for v in versions
+    ]
+    rows = gold.select(
+        "planned",
+        F.array(*flags).alias("flags"),
+        F.array(*renders).alias("records"),
+    ).collect()
+    in_window = {w: [r["flags"][i] for r in rows] for i, w in enumerate(windows)}
+    if "all" in in_window and not any(in_window["all"]):
+        in_window["all"] = [True] * len(rows)
+    return {
+        cfg: [
+            r["records"][versions.index(cfg.version)]
+            for r, keep in zip(rows, in_window[cfg.window])
+            if keep and r["planned"] == cfg.planned
+        ]
+        for cfg in configs
+    }

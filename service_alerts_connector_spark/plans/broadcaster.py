@@ -1,7 +1,8 @@
 """The Broadcaster — gold → 24 versioned JSON feeds (SURVEY §3.3).
 
-One cached gold scan; 24 filter/project plans; JSON array sinks.  The recon
-CDC hop consumes the same gold snapshot (plans/recon.py).
+One collect of gold renders every feed (``operators.feeds.feed_records``);
+the files are written from the driver.  The recon CDC hop consumes the same
+gold snapshot (plans/recon.py).
 """
 
 from __future__ import annotations
@@ -13,7 +14,7 @@ from pyspark.sql import DataFrame
 from service_alerts_connector_spark.operators.feeds import (
     FeedConfig,
     all_feed_configs,
-    generate_feeds,
+    feed_records,
 )
 from service_alerts_connector_spark.sources.json_feed import write_feed
 
@@ -26,14 +27,13 @@ def broadcast_feeds(
 ) -> dict[str, int]:
     """Write every feed; returns {feed path: row count} for observability.
 
-    Counts ride along from the already-computed feed DataFrames (each is
-    tiny post-filter); the gold scan is cached by generate_feeds so the
-    whole fan-out is one pass over gold.
+    The whole fan-out is one Spark job: gold is collected once, and the row
+    counts are the lengths of the driver-side feeds.
     """
     now = now or datetime.now(timezone.utc).replace(tzinfo=None)
+    feeds = feed_records(gold, now, configs or all_feed_configs())
     written: dict[str, int] = {}
-    for cfg, df in generate_feeds(gold, now, configs or all_feed_configs()):
-        rows = df.count()
-        write_feed(df, out_root, cfg.path)
-        written[cfg.path] = rows
+    for cfg, records in feeds.items():
+        write_feed(records, out_root, cfg.path)
+        written[cfg.path] = len(records)
     return written

@@ -155,7 +155,7 @@ def pending_emails(
     delivery key.
 
     The gold scan is reused once per config — the *caller* owns its cache
-    lifecycle (run_service_alerts caches gold before the fan-out and
+    lifecycle (run_micro_batch caches gold before the fan-out and
     unpersists after send_pending's eager collect).  Caching here leaked
     one pinned DataFrame per micro-batch in the foreachBatch path."""
     parts = []

@@ -114,8 +114,9 @@ def run_micro_batch(
     # the previous snapshot are updates → "Updated Service Alert" subject
     if sinks.email_transport is not None and sinks.email_configs:
         sent_log = _try_read(spark, state_root, SENTLOG_DATASET)
-        # cache for the per-config fan-out; released below once send_pending
-        # has eagerly collected (pending_emails must not own the cache — a
+        # cache serving only the per-config email union (pending_emails
+        # scans gold once per config); released below once send_pending has
+        # eagerly collected (pending_emails must not own the cache — a
         # per-micro-batch cache with no unpersist pins executor storage)
         gold_cached = gold.cache()
         pending = pending_emails(gold_cached, sinks.email_configs, sent_log)

@@ -16,6 +16,7 @@ from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from service_alerts_connector_spark.constants import ID_COL
 from service_alerts_connector_spark.operators.dedup import snapshot_diff
@@ -49,24 +50,43 @@ def recon(
     notifier: Notifier | None = None,
     status_col: str = "status",
 ) -> ReconResult:
-    """J8 snapshot diff → per-alert JSON objects (S8) + notification (S9)."""
+    """J8 snapshot diff → per-alert JSON objects (S8) + notification (S9).
+
+    The changed rows are collected once, each flagged ``_is_new`` when its
+    Id is absent from the previous snapshot; both sinks read that one
+    collect.
+    """
     current = gold.select(ID_COL, status_col).distinct()
     changed_keys = snapshot_diff(current, previous_snapshot, [ID_COL, status_col])
     changed = gold.join(changed_keys, [ID_COL, status_col], "left_semi")
 
     # brand-new = Id absent entirely from the previous snapshot (the SNS set;
-    # status-only changes are delivered but not notified — recon.py:83-95)
+    # status-only changes are delivered but not notified — recon.py:83-95).
+    # The snapshot may hold several statuses per Id: its Ids are made
+    # distinct so the left join cannot duplicate a changed row.  Broadcast
+    # by plan, not by AQE: left to AQE, whether the changed rows get
+    # shuffled by Id depends on which side finishes first, so the job
+    # count varied from run to run.
     if previous_snapshot is None:
-        new_ids_df = changed.select(ID_COL)
+        flagged = changed.withColumn("_is_new", F.lit(True))
     else:
-        new_ids_df = changed.select(ID_COL).join(
-            previous_snapshot.select(ID_COL), ID_COL, "left_anti"
+        seen = previous_snapshot.select(ID_COL).distinct().withColumn(
+            "_seen", F.lit(True)
         )
-    notified = sorted(r[ID_COL] for r in new_ids_df.distinct().collect())
+        flagged = changed.join(F.broadcast(seen), ID_COL, "left").select(
+            *changed.columns, F.col("_seen").isNull().alias("_is_new")
+        )
+    rows = flagged.collect()
+    notified = sorted({r[ID_COL] for r in rows if r["_is_new"]})
 
     if out_root is not None:
         write_per_alert_objects(
-            changed, out_root, VERSION_DROPS, id_col=ID_COL, status_col=status_col
+            rows,
+            changed.columns,
+            out_root,
+            VERSION_DROPS,
+            id_col=ID_COL,
+            status_col=status_col,
         )
     if notifier is not None and notified:
         notifier(notified)

@@ -101,6 +101,26 @@ def test_two_microbatch_pipeline(spark, tmp_path):
     assert n_cached_after <= n_cached_before
 
 
+def test_feeds_only_run_leaves_nothing_cached(spark, tmp_path):
+    """With feed sinks and no email sinks nothing may stay pinned: only the
+    email block caches gold, and it releases what it caches."""
+    from service_alerts_connector_spark.sources.sharepoint import (
+        read_sharepoint,
+    )
+
+    n_cached_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    bronze = read_sharepoint(spark, lambda: RAW_ALERTS[:3])
+    run_micro_batch(
+        bronze,
+        str(tmp_path / "lake"),
+        sinks=PipelineSinks(feeds_root=str(tmp_path / "feeds")),
+        now=NOW,
+    )
+    assert len(list((tmp_path / "feeds").rglob("*.json"))) == 24
+    n_cached_after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    assert n_cached_after == n_cached_before
+
+
 def test_streaming_sharepoint_source_equals_batch_run(spark, tmp_path):
     """The full alert pipeline driven from the REGISTERED SharePoint
     DataSource in streaming mode — partitioned executor-side reader (the

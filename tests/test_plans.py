@@ -164,14 +164,20 @@ def test_emailer_legacy_sent_key_fallback(spark):
     assert ("water-planned", 1) not in left and ("water-planned", 2) not in left
 
 
+RECON_GOLD = [(1, "Open", "a"), (2, "Closed", "b"), (3, "Open", "c")]
+
+
+def _recon_gold(spark):
+    return spark.createDataFrame(RECON_GOLD, "Id long, status string, title string")
+
+
+def _snapshot(spark, pairs):
+    return spark.createDataFrame(pairs, "Id long, status string")
+
+
 def test_recon_cdc(spark, tmp_path):
-    gold = spark.createDataFrame(
-        [(1, "Open", "a"), (2, "Closed", "b"), (3, "Open", "c")],
-        "Id long, status string, title string",
-    )
-    prev = spark.createDataFrame(
-        [(1, "Open"), (2, "Open")], "Id long, status string"
-    )
+    gold = _recon_gold(spark)
+    prev = _snapshot(spark, [(1, "Open"), (2, "Open")])
     notifications = []
     result = recon(gold, prev, out_root=str(tmp_path), notifier=notifications.extend)
     changed = {r["Id"] for r in result.changed.collect()}
@@ -180,6 +186,48 @@ def test_recon_cdc(spark, tmp_path):
     assert (tmp_path / "v1.2" / "3.Open.json").exists()
     assert (tmp_path / "v1" / "2.Closed.json").exists()
     assert result.new_snapshot.count() == 3
+    # exact object bytes: gold's column order, one object per version
+    objects = {
+        str(f.relative_to(tmp_path)): f.read_text()
+        for f in tmp_path.rglob("*.json")
+    }
+    assert objects == {
+        f"{v}/{i}.{st}.json": f'{{"Id": {i}, "status": "{st}", "title": "{t}"}}'
+        for v in ("v1", "v1.1", "v1.2")
+        for i, st, t in RECON_GOLD[1:]
+    }
+
+
+def test_recon_first_run_notifies_every_id(spark, tmp_path):
+    notifications = []
+    result = recon(
+        _recon_gold(spark), None, out_root=str(tmp_path),
+        notifier=notifications.extend,
+    )
+    assert notifications == result.notified_ids == [1, 2, 3]
+    assert len(list(tmp_path.rglob("*.json"))) == 3 * len(RECON_GOLD)
+
+
+def test_recon_snapshot_with_two_statuses_per_id(spark, tmp_path, monkeypatch):
+    """An Id the snapshot holds under two statuses is neither written twice
+    (the new-Id join must not fan out) nor notified."""
+    from service_alerts_connector_spark.plans import recon as recon_mod
+
+    write = recon_mod.write_per_alert_objects
+    paths: list[str] = []
+
+    def capture(*args, **kwargs):
+        written = write(*args, **kwargs)
+        paths.extend(written)
+        return written
+
+    monkeypatch.setattr(recon_mod, "write_per_alert_objects", capture)
+    prev = _snapshot(spark, [(1, "Open"), (2, "Open"), (2, "Pending")])
+    notifications = []
+    recon(_recon_gold(spark), prev, out_root=str(tmp_path),
+          notifier=notifications.extend)
+    assert notifications == [3]
+    assert len(paths) == len(set(paths)) == 3 * 2  # Ids 2 and 3, 3 versions
 
 
 def test_multimodal_features_and_dedup(spark):
