@@ -940,9 +940,10 @@ HAVING l_orderkey % 20 = 0
 
 
 # ---------------------------------------------------------------------------
-# P6/P7-as-data — config-table join fan-out (the emailer scale path):
-# subscriber configs are ROWS joined against the fact table, so the plan is
-# one broadcast join regardless of config count (vs per-config union branches)
+# P6/P7-as-data — config-table join fan-out: subscriber configs are ROWS
+# joined against the fact table, so the plan is one broadcast join regardless
+# of config count (plans/emailer.py gets the same property from one
+# projection that evaluates every config predicate per row)
 # (reference SA_EMAIL_CONFIGS, ServiceAlertEmailer.py:88-671; SURVEY §3.3)
 # ---------------------------------------------------------------------------
 def q_config_join_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1000,13 +1001,12 @@ WHERE o_orderkey % 40 = 0
 
 
 def q_config_fanout_1k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The emailer's config-as-data fan-out at PRODUCTION config
-    cardinality: 1 000 synthetic configs generated as a DataFrame (never a
-    driver-side literal list), theta-joined to orders under the same
-    nullable-predicate shape as ``config_join_fanout``.  Proves the
-    SCALE.md claim that the fan-out stays ONE broadcast join regardless of
-    config count — the fact side never shuffles, each order row evaluates
-    the broadcast predicate table in place (plan-pinned by
+    """Config-as-data fan-out at PRODUCTION config cardinality: 1 000
+    synthetic configs generated as a DataFrame (never a driver-side literal
+    list), theta-joined to orders under the same nullable-predicate shape
+    as ``config_join_fanout``.  The fan-out stays ONE broadcast join
+    regardless of config count — the fact side never shuffles, each order
+    row evaluates the broadcast predicate table in place (plan-pinned by
     tests/test_plan_shapes.py::test_config_fanout_single_broadcast).
     ~1/6 of configs match each order → a genuine row explosion, priced in
     the bench."""

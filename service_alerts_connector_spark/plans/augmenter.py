@@ -63,15 +63,6 @@ SERVICE_AREA_HASHTAGS = {
 }
 
 
-def default_draft_prompt(rec: dict) -> str:
-    """Minimal fallback prompt (kept for tests/compat; ``augment`` uses the
-    packaged few-shot summary template by default)."""
-    return (
-        "Draft a short public service-alert post.\n"
-        + "\n".join(f"{k}: {v}" for k, v in sorted(rec.items()) if k != ID_COL)
-    )
-
-
 @dataclass
 class AugmenterConfig:
     llm_clients: list[LLMClient] = field(

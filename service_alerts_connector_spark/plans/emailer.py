@@ -11,6 +11,8 @@ pandas ``query()`` strings and curried row predicates
 * P7 — the ward/service-area curried predicates become parameterized
   expression builders (``array_contains`` — no UDF).
 
+Fan-out: every config's predicate is evaluated in one projection of gold
+(``pending_emails``), so gold is read once for any number of configs.
 Sent-dedup (ST6): a delivery-log anti-join on the deterministic email key
 replaces the reference's object-listing probe — set-based, idempotent.
 Compose (X5) renders Jinja2 HTML per row on the driver (volumes are tens of
@@ -100,33 +102,25 @@ EXAMPLE_EMAIL_CONFIGS = [
 ]
 
 
-def email_key(config_name: str) -> Column:
+def email_key(config_name: Column) -> Column:
     """ST6 — deterministic delivery key: sha256(config ‖ Id ‖ status), the
     engine analog of the reference's status-aware sent-email filenames
     (ServiceAlertEmailer.py:793-814)."""
     return F.sha2(
         F.concat_ws(
-            "|", F.lit(config_name), F.col(ID_COL).cast("string"), F.col("status")
+            "|", config_name, F.col(ID_COL).cast("string"), F.col("status")
         ),
         256,
     )
 
 
-def legacy_email_key(config_name: str) -> Column:
+def legacy_email_key(config_name: Column) -> Column:
     """Pre-status delivery key: sha256(config ‖ Id) — the engine analog of
     the reference's *legacy* filename form, which sent-dedup still honours
     so a live-state migration doesn't resend every historical alert
     (ServiceAlertEmailer.py:793-808 checks both filename forms)."""
     return F.sha2(
-        F.concat_ws("|", F.lit(config_name), F.col(ID_COL).cast("string")),
-        256,
-    )
-
-
-def legacy_email_key_col(config_name_col: Column) -> Column:
-    """legacy_email_key with the config name as a column (join fan-out)."""
-    return F.sha2(
-        F.concat_ws("|", config_name_col, F.col(ID_COL).cast("string")), 256
+        F.concat_ws("|", config_name, F.col(ID_COL).cast("string")), 256
     )
 
 
@@ -149,79 +143,60 @@ def pending_emails(
     gold: DataFrame,
     configs: list[EmailConfig],
     sent_log: DataFrame | None = None,
+    previous_snapshot: DataFrame | None = None,
 ) -> DataFrame:
     """Fan out gold through every config predicate and anti-join the sent
-    log.  Output: one row per (config, alert) still to send, with the
-    delivery key.
+    log.  Output: one row per (config, alert) still to send — gold's
+    columns plus ``config_name``, ``recipients`` and both delivery keys.
 
-    The gold scan is reused once per config — the *caller* owns its cache
-    lifecycle (run_micro_batch caches gold before the fan-out and
-    unpersists after send_pending's eager collect).  Caching here leaked
-    one pinned DataFrame per micro-batch in the foreachBatch path."""
-    parts = []
-    for cfg in configs:
-        parts.append(
-            gold.where(cfg.predicate())
-            .withColumn("config_name", F.lit(cfg.name))
-            .withColumn("recipients", F.lit(list(cfg.recipients)).cast("array<string>"))
-            .withColumn("email_key", email_key(cfg.name))
-            .withColumn("legacy_email_key", legacy_email_key(cfg.name))
-        )
-    fanned = parts[0]
-    for p in parts[1:]:
-        fanned = fanned.unionByName(p)
-    if sent_log is not None:
-        fanned = _anti_join_sent(fanned, sent_log)
-    return fanned
+    One projection evaluates every config: each row carries an array with
+    one ``(config_name, recipients)`` struct per config whose predicate
+    holds (null where it does not or is null, as ``where`` drops it), and
+    the non-null elements are exploded.  Gold is scanned once and the plan
+    is the same size whatever the config count.
 
-
-def pending_emails_joined(
-    gold: DataFrame,
-    config_rows: DataFrame,
-    sent_log: DataFrame | None = None,
-) -> DataFrame:
-    """Scale path for the structured (P7-style) configs: configs as a
-    DataFrame joined against gold, instead of one union branch per config.
-
-    ``config_rows`` schema: (config_name string, recipients array<string>,
-    ward string, service_area string, planned boolean) — null fields are
-    wildcards.  The join condition evaluates each predicate family as data:
-    100 configs or 100 000 configs produce the *same* two-operator plan
-    (broadcast join + anti-join), where the union path grows linearly in
-    plan size.  Free-form SQL-string configs (P6) stay on `pending_emails`.
-    """
-    cfg = F.broadcast(config_rows)
-    cond = (
-        (cfg["ward"].isNull() | (
-            F.array_contains(F.coalesce(gold["inferred_wards"],
-                                        F.array().cast("array<string>")),
-                             cfg["ward"])
-            & (F.coalesce(gold["area_type"], F.lit("")) != "Citywide")
-        ))
-        & (cfg["service_area"].isNull()
-           | (gold["service_area"] == cfg["service_area"]))
-        & (cfg["planned"].isNull() | (gold["planned"] == cfg["planned"]))
+    With ``previous_snapshot`` (the recon snapshot before this run), rows
+    whose Id it holds carry ``_is_update`` → the "Updated Service Alert"
+    subject."""
+    matches = F.array(
+        *[
+            F.when(
+                cfg.predicate(),
+                F.struct(
+                    F.lit(cfg.name).alias("config_name"),
+                    F.lit(list(cfg.recipients))
+                    .cast("array<string>")
+                    .alias("recipients"),
+                ),
+            )
+            for cfg in configs
+        ]
     )
-    fanned = (
-        gold.join(cfg, cond)
-        .withColumn("email_key", email_key_col(F.col("config_name")))
-        .withColumn(
-            "legacy_email_key", legacy_email_key_col(F.col("config_name"))
-        )
+    fanned = gold.select(
+        "*", F.inline(F.filter(matches, lambda m: m.isNotNull()))
+    ).withColumns(
+        {
+            "email_key": email_key(F.col("config_name")),
+            "legacy_email_key": legacy_email_key(F.col("config_name")),
+        }
     )
     if sent_log is not None:
         fanned = _anti_join_sent(fanned, sent_log)
+    if previous_snapshot is not None:
+        prev_ids = previous_snapshot.select(
+            F.col(ID_COL), F.lit(True).alias("_is_update")
+        ).distinct()
+        fanned = fanned.join(prev_ids, ID_COL, "left").withColumn(
+            "_is_update", F.coalesce(F.col("_is_update"), F.lit(False))
+        )
     return fanned
 
 
-def email_key_col(config_name_col: Column) -> Column:
-    """email_key with the config name as a column (join fan-out path)."""
-    return F.sha2(
-        F.concat_ws(
-            "|", config_name_col, F.col(ID_COL).cast("string"), F.col("status")
-        ),
-        256,
-    )
+def email_subject(rec: dict) -> str:
+    """ST7/X5 — updates get the "Updated" subject (reference
+    ServiceAlertEmailer.py:693-696)."""
+    prefix = "Updated Service Alert" if rec.get("_is_update") else "Service Alert"
+    return f"{prefix}: {rec.get('title', '')}"
 
 
 def render_email_html(rec: dict) -> str:
@@ -242,18 +217,13 @@ def render_email_html(rec: dict) -> str:
         if citywide and k in ("area", "area_type", "location"):
             continue
         fields[k] = str(v)
-    subject_prefix = (
-        "Updated Service Alert" if rec.get("_is_update") else "Service Alert"
-    )
     template = jinja2.Template(
         "<html><body><h1>{{ subject }}</h1>"
         "<table>{% for k, v in fields.items() %}"
         "<tr><td>{{ k }}</td><td>{{ v }}</td></tr>{% endfor %}</table>"
         "</body></html>"
     )
-    return template.render(
-        subject=f"{subject_prefix}: {rec.get('title', '')}", fields=fields
-    )
+    return template.render(subject=email_subject(rec), fields=fields)
 
 
 Transport = Callable[[tuple[str, ...], str, str], None]  # (to, subject, html)
@@ -277,16 +247,7 @@ def send_pending(
     for r in rows:
         rec = r.asDict()
         html = render_email_html(rec)
-        # ST7/X5 — updates get the "Updated" subject (reference
-        # ServiceAlertEmailer.py:693-696)
-        prefix = (
-            "Updated Service Alert" if rec.get("_is_update") else "Service Alert"
-        )
-        transport(
-            tuple(rec["recipients"]),
-            f"{prefix}: {rec.get('title', '')}",
-            html,
-        )
+        transport(tuple(rec["recipients"]), email_subject(rec), html)
         if archive_root is not None:
             from pathlib import Path
 

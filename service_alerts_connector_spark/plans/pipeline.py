@@ -114,23 +114,10 @@ def run_micro_batch(
     # the previous snapshot are updates → "Updated Service Alert" subject
     if sinks.email_transport is not None and sinks.email_configs:
         sent_log = _try_read(spark, state_root, SENTLOG_DATASET)
-        # cache serving only the per-config email union (pending_emails
-        # scans gold once per config); released below once send_pending has
-        # eagerly collected (pending_emails must not own the cache — a
-        # per-micro-batch cache with no unpersist pins executor storage)
-        gold_cached = gold.cache()
-        pending = pending_emails(gold_cached, sinks.email_configs, sent_log)
-        if prev_snapshot is not None:
-            from pyspark.sql import functions as F
-
-            prev_ids = prev_snapshot.select(
-                F.col("Id"), F.lit(True).alias("_is_update")
-            ).distinct()
-            pending = pending.join(prev_ids, "Id", "left").withColumn(
-                "_is_update", F.coalesce(F.col("_is_update"), F.lit(False))
-            )
+        pending = pending_emails(
+            gold, sinks.email_configs, sent_log, prev_snapshot
+        )
         new_log = send_pending(pending, sinks.email_transport)
-        gold_cached.unpersist()
         merged_log = (
             new_log
             if sent_log is None

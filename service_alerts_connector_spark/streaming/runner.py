@@ -15,20 +15,11 @@ swaps these for Delta tables + MERGE with no plan changes.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from service_alerts_connector_spark.constants import (
-    RAW_DATASET,
-    SANITISED_DATASET,
-)
 from service_alerts_connector_spark.schemas import RAW_SCHEMA
-from service_alerts_connector_spark.sources.parquet_io import (
-    read_dataset,
-    write_dataset,
-)
 
 BatchFn = Callable[[DataFrame, int], None]
 
@@ -46,25 +37,6 @@ def stream_raw_alerts(
         .json(staged_path)
         .na.drop(subset=["Publish_x0020_Date"])
     )
-
-
-@dataclass
-class PipelineState:
-    """Parquet-backed state handles for a streaming deployment."""
-
-    root: str
-
-    def previous_silver(self, spark: SparkSession) -> DataFrame | None:
-        try:
-            return read_dataset(spark, self.root, SANITISED_DATASET)
-        except FileNotFoundError:
-            return None
-
-    def write_silver(self, df: DataFrame) -> None:
-        write_dataset(df, self.root, SANITISED_DATASET)
-
-    def write_bronze(self, df: DataFrame) -> None:
-        write_dataset(df, self.root, RAW_DATASET)
 
 
 def run_available_now(

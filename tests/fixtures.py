@@ -150,3 +150,11 @@ def sharepoint_demo_fetcher():
             "Status12": "Assigned",
         },
     ]
+
+
+def jobs_launched(spark, fn) -> int:
+    """Spark jobs (driver round trips) ``fn()`` launches."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    before = scheduler.numTotalJobs()
+    fn()
+    return scheduler.numTotalJobs() - before

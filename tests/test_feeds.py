@@ -17,6 +17,7 @@ from service_alerts_connector_spark.schemas import V0_COLS, V1_2_COLS
 from service_alerts_connector_spark.sources.json_feed import (
     dataframe_to_json_records,
 )
+from tests.fixtures import jobs_launched
 
 NOW = datetime(2024, 2, 14, 12, 0, 0)
 
@@ -141,21 +142,13 @@ def test_json_records_shape(spark):
     assert all(v is not None for v in rec.values())
 
 
-def _jobs_launched(spark, fn) -> int:
-    """Spark jobs (driver round trips) ``fn()`` launches."""
-    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
-    before = scheduler.numTotalJobs()
-    fn()
-    return scheduler.numTotalJobs() - before
-
-
 def test_broadcast_feeds_is_one_job(spark, tmp_path):
     # per-config plans took 89 jobs here: a count and a collect per feed,
     # plus a min(expiry_date) anchor per 'all' feed
     _gold(spark).write.parquet(str(tmp_path / "gold"))
     gold = spark.read.parquet(str(tmp_path / "gold"))
     out = str(tmp_path / "feeds")
-    assert _jobs_launched(spark, lambda: broadcast_feeds(gold, out, now=NOW)) == 1
+    assert jobs_launched(spark, lambda: broadcast_feeds(gold, out, now=NOW)) == 1
 
 
 def test_recon_job_count(spark, tmp_path):
@@ -169,4 +162,4 @@ def test_recon_job_count(spark, tmp_path):
     )
     prev = spark.createDataFrame([(1, "Open"), (2, "Open")], "Id long, status string")
     run = lambda: recon(gold, prev, out_root=str(tmp_path), notifier=lambda ids: None)
-    assert _jobs_launched(spark, run) == 8
+    assert jobs_launched(spark, run) == 8

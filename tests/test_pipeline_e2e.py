@@ -94,16 +94,51 @@ def test_two_microbatch_pipeline(spark, tmp_path):
     assert subjects[0].startswith("Service Alert:")  # first sight
     assert subjects[1].startswith("Updated Service Alert:")  # status change
 
-    # cache hygiene: the email fan-out cache is released per batch — the
-    # two-batch run must not leave any extra DataFrame pinned (the old
-    # pending_emails-owned cache leaked one per micro-batch)
+    # cache hygiene: the email fan-out reads gold once and caches nothing —
+    # the two-batch run must not leave any extra DataFrame pinned
     n_cached_after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     assert n_cached_after <= n_cached_before
 
 
+def test_email_run_subjects_and_nothing_cached(spark, tmp_path):
+    """Two batch runs with email sinks: the first sighting gets the plain
+    subject, the status change the "Updated" one, and no run leaves a
+    DataFrame persisted."""
+    from service_alerts_connector_spark.sources.sharepoint import (
+        read_sharepoint,
+    )
+
+    n_cached_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    outbox: list[str] = []
+    sinks = PipelineSinks(
+        email_transport=lambda to, s, h: outbox.append(s),
+        email_configs=[
+            EmailConfig(
+                name="water-unplanned",
+                recipients=("w@example.org",),
+                service_area="Water & Sanitation",
+                planned=False,
+            )
+        ],
+    )
+    lake = str(tmp_path / "lake")
+    run_micro_batch(
+        read_sharepoint(spark, lambda: RAW_ALERTS[:3]), lake, sinks=sinks, now=NOW
+    )
+    updated = dict(RAW_ALERTS[0], Status12="Issue Resolved")
+    run_micro_batch(
+        read_sharepoint(spark, lambda: [updated], ingest_seq_start=100),
+        lake,
+        sinks=sinks,
+        now=NOW,
+    )
+    assert outbox == ["Service Alert: Water Off", "Updated Service Alert: Water Off"]
+    n_cached_after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    assert n_cached_after - n_cached_before == 0
+
+
 def test_feeds_only_run_leaves_nothing_cached(spark, tmp_path):
-    """With feed sinks and no email sinks nothing may stay pinned: only the
-    email block caches gold, and it releases what it caches."""
+    """With feed sinks and no email sinks nothing may stay pinned."""
     from service_alerts_connector_spark.sources.sharepoint import (
         read_sharepoint,
     )

@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 from service_alerts_connector_spark.plans.augmenter import augment
 from service_alerts_connector_spark.plans.emailer import (
     EXAMPLE_EMAIL_CONFIGS,
+    email_key,
+    legacy_email_key,
     pending_emails,
     send_pending,
 )
@@ -17,7 +19,7 @@ from service_alerts_connector_spark.sources.multimodal import (
     exact_media_dedup,
     media_features,
 )
-from tests.fixtures import RAW_ALERTS
+from tests.fixtures import RAW_ALERTS, jobs_launched
 
 
 def _silver(spark):
@@ -130,8 +132,6 @@ def test_emailer_legacy_sent_key_fallback(spark):
     """A sent log migrated from the legacy (status-less) key form still
     dedups: reference checks both filename forms
     (ServiceAlertEmailer.py:793-808)."""
-    from service_alerts_connector_spark.plans.emailer import legacy_email_key
-
     gold = spark.createDataFrame(
         [(1, "Water & Sanitation", "Leak", "Open", True, "Official Planning Suburb",
           ["grassy park"], ["57"]),
@@ -143,7 +143,7 @@ def test_emailer_legacy_sent_key_fallback(spark):
     # a log holding alert 1's LEGACY key only (as a migrated store would)
     legacy_log = (
         gold.where("Id = 1")
-        .select(legacy_email_key("water-planned").alias("email_key"))
+        .select(legacy_email_key(F.lit("water-planned")).alias("email_key"))
     )
     pending = pending_emails(gold, EXAMPLE_EMAIL_CONFIGS, legacy_log)
     got = {(r["config_name"], r["Id"]) for r in pending.collect()}
@@ -162,6 +162,88 @@ def test_emailer_legacy_sent_key_fallback(spark):
         for r in pending_emails(gold, EXAMPLE_EMAIL_CONFIGS, mixed).collect()
     }
     assert ("water-planned", 1) not in left and ("water-planned", 2) not in left
+
+
+EMAIL_GOLD_SCHEMA = (
+    "Id long, service_area string, title string, status string, planned boolean, "
+    "area_type string, inferred_suburbs array<string>, inferred_wards array<string>"
+)
+
+
+def _rows(df):
+    return sorted(repr(r) for r in df.collect())
+
+
+def test_pending_emails_equals_per_config_reference(spark):
+    """One projection over gold = the per-config ``where`` reference, row
+    for row, including rows whose predicates evaluate to null."""
+    gold = spark.createDataFrame(
+        [
+            # matches grassy-park-watch and ward-57-unplanned
+            (1, "Water & Sanitation", "Leak", "Open", False, "Official Planning Suburb",
+             ["Grassy Park"], ["57"]),
+            (2, "Water & Sanitation", "Leak", "Open", True, "Official Planning Suburb",
+             ["grassy-park"], ["57", "58"]),
+            (3, "Water & Sanitation", "Burst", "Open", None, None, None, None),
+            (4, "Electricity", "Fault", "Open", False, None, ["grassy park"], ["57"]),
+            (5, "Water & Sanitation", "Burst", "Closed", True, "Citywide",
+             ["grassy park"], ["57"]),
+            (6, None, None, "Open", None, "Official Planning Suburb", [None], [None]),
+        ],
+        EMAIL_GOLD_SCHEMA,
+    )
+    pending = pending_emails(gold, EXAMPLE_EMAIL_CONFIGS)
+    reference = [
+        gold.where(cfg.predicate())
+        .withColumn("config_name", F.lit(cfg.name))
+        .withColumn("recipients", F.lit(list(cfg.recipients)).cast("array<string>"))
+        .withColumn("email_key", email_key(F.lit(cfg.name)))
+        .withColumn("legacy_email_key", legacy_email_key(F.lit(cfg.name)))
+        for cfg in EXAMPLE_EMAIL_CONFIGS
+    ]
+    assert pending.columns == reference[0].columns
+    want = sorted(r for df in reference for r in _rows(df))
+    assert _rows(pending) == want
+    assert {(r["config_name"], r["Id"]) for r in pending.collect()} >= {
+        ("grassy-park-watch", 1), ("ward-57-unplanned", 1), ("water-planned", 2),
+    }
+
+
+def test_pending_emails_and_send_job_count(spark, tmp_path):
+    """Jobs the pipeline's email step launches: fan-out, sent-log anti-join,
+    update flag and send.  The per-config union over a cached gold, with
+    the update join in the pipeline, launched 8 here."""
+    gold_rows = [
+        (1, "Water & Sanitation", "Leak", "Open", True, "Official Planning Suburb",
+         ["grassy park"], ["57"]),
+        (2, "Electricity", "Fault", "Open", False, "Official Planning Suburb",
+         ["woodstock"], ["57"]),
+        (3, "Water & Sanitation", "Burst", "Closed", True, "Citywide", None, None),
+    ]
+    spark.createDataFrame(gold_rows, EMAIL_GOLD_SCHEMA).write.parquet(
+        str(tmp_path / "gold")
+    )
+    gold = spark.read.parquet(str(tmp_path / "gold"))
+    sent = send_pending(
+        pending_emails(gold.where("Id = 3"), EXAMPLE_EMAIL_CONFIGS), lambda *a: None
+    )
+    sent.write.parquet(str(tmp_path / "sent"))
+    spark.createDataFrame([(1, "Open"), (3, "Open")], "Id long, status string").write.parquet(
+        str(tmp_path / "snapshot")
+    )
+    sent_log = spark.read.parquet(str(tmp_path / "sent"))
+    snapshot = spark.read.parquet(str(tmp_path / "snapshot"))
+    outbox = []
+
+    def run():
+        pending = pending_emails(gold, EXAMPLE_EMAIL_CONFIGS, sent_log, snapshot)
+        send_pending(pending, lambda to, subj, html: outbox.append(subj))
+
+    assert jobs_launched(spark, run) == 5
+    assert sorted(outbox) == [
+        "Service Alert: Fault", "Updated Service Alert: Leak",
+        "Updated Service Alert: Leak",
+    ]
 
 
 RECON_GOLD = [(1, "Open", "a"), (2, "Closed", "b"), (3, "Open", "c")]

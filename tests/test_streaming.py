@@ -13,9 +13,12 @@ from service_alerts_connector_spark.enrichment.images import (
 )
 from service_alerts_connector_spark.plans.fixer import fix_alerts
 from service_alerts_connector_spark.operators.dedup import upsert
-from service_alerts_connector_spark.sources.parquet_io import read_dataset
+from service_alerts_connector_spark.sources.parquet_io import (
+    list_versions,
+    read_dataset,
+    write_dataset,
+)
 from service_alerts_connector_spark.streaming.runner import (
-    PipelineState,
     run_available_now,
     stream_raw_alerts,
 )
@@ -36,14 +39,14 @@ def test_stream_available_now_fixer(spark, tmp_path):
         f.write(json.dumps(updated) + "\n")
         f.write(json.dumps(RAW_ALERTS[4]) + "\n")  # null publish date
 
-    state = PipelineState(root=str(tmp_path / "lake"))
+    lake = str(tmp_path / "lake")
 
     def batch_fn(batch_df, batch_id):
         silver = fix_alerts(batch_df)
-        prev = state.previous_silver(batch_df.sparkSession)
-        if prev is not None:
+        if list_versions(lake, SANITISED_DATASET):
+            prev = read_dataset(batch_df.sparkSession, lake, SANITISED_DATASET)
             silver = upsert(prev, silver)
-        state.write_silver(silver)
+        write_dataset(silver, lake, SANITISED_DATASET)
 
     stream = stream_raw_alerts(
         spark, str(staged), max_files_per_trigger=1

@@ -1,4 +1,4 @@
-"""Full geocode-waterfall + config-join emailer fan-out tests."""
+"""Full geocode-waterfall + many-config emailer fan-out tests."""
 
 from __future__ import annotations
 
@@ -6,7 +6,10 @@ from service_alerts_connector_spark.enrichment.geocode import (
     StubGeocoder,
     full_geocode_waterfall,
 )
-from service_alerts_connector_spark.plans.emailer import pending_emails_joined
+from service_alerts_connector_spark.plans.emailer import (
+    EmailConfig,
+    pending_emails,
+)
 
 
 def test_full_geocode_waterfall_tiers(spark):
@@ -46,7 +49,7 @@ def test_full_geocode_waterfall_tiers(spark):
     assert 3 not in out  # blank suggestion resolved nothing
 
 
-def test_pending_emails_joined_scales_by_data(spark):
+def test_pending_emails_101_configs_one_projection(spark):
     gold = spark.createDataFrame(
         [
             (1, "Water & Sanitation", "Leak", "Open", True,
@@ -59,27 +62,29 @@ def test_pending_emails_joined_scales_by_data(spark):
         "Id long, service_area string, title string, status string, "
         "planned boolean, area_type string, inferred_wards array<string>",
     )
-    # 100 ward configs + 1 service-area config, as DATA rows
-    cfg_rows = [
-        (f"ward-{w}", [f"w{w}@example.org"], str(w), None, None)
+    # 100 ward configs + 1 service-area config
+    configs = [
+        EmailConfig(name=f"ward-{w}", recipients=(f"w{w}@example.org",), ward=str(w))
         for w in range(1, 101)
-    ] + [("water-planned", ["water@example.org"], None, "Water & Sanitation", True)]
-    configs = spark.createDataFrame(
-        cfg_rows,
-        "config_name string, recipients array<string>, ward string, "
-        "service_area string, planned boolean",
-    )
-    pending = pending_emails_joined(gold, configs)
+    ] + [
+        EmailConfig(
+            name="water-planned",
+            recipients=("water@example.org",),
+            service_area="Water & Sanitation",
+            planned=True,
+        )
+    ]
+    pending = pending_emails(gold, configs)
     got = {(r["config_name"], r["Id"]) for r in pending.collect()}
-    assert ("ward-57", 1) in got
-    assert ("ward-58", 2) in got
-    assert ("ward-57", 3) not in got  # Citywide excluded from ward streams
-    assert ("water-planned", 1) in got and ("water-planned", 3) in got
-    # plan stays two joins regardless of config count (no 101-way union)
-    plan = pending._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastNestedLoopJoin") + plan.count("BroadcastHashJoin") <= 2
-    assert "Union" not in plan
+    assert got == {
+        ("ward-57", 1), ("ward-58", 2),  # Citywide 3 excluded from ward streams
+        ("water-planned", 1), ("water-planned", 3),
+    }
+    # one projection of one gold scan, whatever the config count
+    plan = pending._jdf.queryExecution().optimizedPlan()
+    assert "Union" not in plan.toString()
+    assert plan.collectLeaves().size() == 1
 
-    # sent-log anti-join idempotence on the join path
+    # sent-log anti-join idempotence
     sent = pending.select("email_key")
-    assert pending_emails_joined(gold, configs, sent).count() == 0
+    assert pending_emails(gold, configs, sent).count() == 0
