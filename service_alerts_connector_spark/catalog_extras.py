@@ -51,7 +51,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_x1_stub_drafts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1 — LLM post drafting over pseudo-alerts built from documents,
-    deterministic stub client, DRAFT_LIMIT cap + coalesced concurrency."""
+    deterministic stub client, largest-Id cap into one partition."""
     alerts = (
         _docs(spark, sf_dir)
         .where(F.col("doc_id") < 40)

@@ -9,10 +9,11 @@ Engine decomposition (each tier strictly cheaper rows than the last):
 
 1. tier 1/2 are *joins* (operators/spatial.py: area_lookup_join,
    fuzzy_street_match) — fully relational, no external calls;
-2. only rows still unresolved reach :func:`geocode_tail`, a
-   single-partition-bounded ``mapInPandas`` with an injectable geocoder and
-   a token-bucket delay — the distributed analog of the reference's serial
-   rate-limited loop;
+2. only rows still unresolved reach :func:`geocode_rows`, a serial loop
+   over an injectable geocoder with a minimum delay between calls — the
+   reference's rate-limited loop.  The augmenter runs it on the driver over
+   its collected work set; :func:`geocode_tail` runs it as a
+   single-partition ``mapInPandas``;
 3. results memoize into a (query → WKT) table the caller persists and
    anti-joins against on the next batch, so repeat queries never re-hit the
    external service (the reference's lru_cache, made durable).
@@ -22,13 +23,14 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
-from typing import Iterator, Protocol
+from typing import Protocol
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from service_alerts_connector_spark.enrichment import map_row_loop
 from service_alerts_connector_spark.geo import ops as G
 from service_alerts_connector_spark.geo import wkt as W
 
@@ -54,6 +56,49 @@ class StubGeocoder:
         return (x, y, x + 0.01, y + 0.01)
 
 
+def geocode_rows(
+    pdf: pd.DataFrame,
+    geocoder: Geocoder,
+    query_col: str = "location",
+    bounding_wkt_col: str | None = None,
+    min_delay_s: float = 0.0,
+) -> tuple[list[str | None], list[str | None]]:
+    """X3 tail row loop — one geocoder call per non-empty query of ``pdf``,
+    at least ``min_delay_s`` apart, as (WKTs, errors).  A box that misses
+    the row's ``bounding_wkt_col`` polygon is dropped."""
+    last_call = 0.0
+
+    def one(row: pd.Series) -> tuple[str | None, str | None]:
+        nonlocal last_call
+        q = row[query_col]
+        if q is None or (isinstance(q, float) and pd.isna(q)) or not str(q).strip():
+            return None, "empty query"
+        wait = min_delay_s - (time.monotonic() - last_call)
+        if wait > 0:
+            time.sleep(wait)
+        last_call = time.monotonic()
+        try:
+            box = geocoder.geocode(str(q))
+        except Exception as e:  # noqa: BLE001
+            return None, f"{type(e).__name__}: {e}"
+        if box is None:
+            return None, "not found"
+        poly = G.bbox_polygon(*box)
+        bound = row.get(bounding_wkt_col) if bounding_wkt_col else None
+        if bound is not None and not (isinstance(bound, float) and pd.isna(bound)):
+            try:
+                kind, shape = W.parse_wkt(bound)
+                bpolys = [shape] if kind == "polygon" else list(shape)
+                if not any(G.polygons_intersect(poly, bp) for bp in bpolys):
+                    return None, "outside bounding polygon"
+            except ValueError:
+                pass
+        return W.polygon_to_wkt(poly), None
+
+    out = [one(row) for _, row in pdf.iterrows()]
+    return [w for w, _ in out], [e for _, e in out]
+
+
 def geocode_tail(
     unresolved: DataFrame,
     geocoder: Geocoder,
@@ -63,7 +108,8 @@ def geocode_tail(
     min_delay_s: float = 0.0,
     max_partitions: int = 1,
 ) -> DataFrame:
-    """Rate-limited external geocoding of the unresolved remainder.
+    """Rate-limited external geocoding of the unresolved remainder:
+    :func:`geocode_rows` as a ``mapInPandas``.
 
     ``max_partitions=1`` + ``min_delay_s`` bounds the global request rate
     exactly like the reference's ``GEOCODER_DELAY=2`` serial loop; raise
@@ -73,68 +119,17 @@ def geocode_tail(
     work = unresolved.select(
         id_col, query_col, *( [bounding_wkt_col] if bounding_wkt_col else [] )
     ).coalesce(max_partitions)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        last_call = 0.0
-        for pdf in batches:
-            ids, wkts, errs = [], [], []
-            for _, row in pdf.iterrows():
-                q = row[query_col]
-                if q is None or (isinstance(q, float) and pd.isna(q)) or not str(q).strip():
-                    ids.append(row[id_col]); wkts.append(None); errs.append("empty query")
-                    continue
-                wait = min_delay_s - (time.monotonic() - last_call)
-                if wait > 0:
-                    time.sleep(wait)
-                last_call = time.monotonic()
-                try:
-                    box = geocoder.geocode(str(q))
-                except Exception as e:  # noqa: BLE001
-                    ids.append(row[id_col]); wkts.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-                    continue
-                if box is None:
-                    ids.append(row[id_col]); wkts.append(None); errs.append("not found")
-                    continue
-                poly = G.bbox_polygon(*box)
-                # clip/validate against the bounding polygon if present
-                err = None
-                if bounding_wkt_col is not None:
-                    bound = row.get(bounding_wkt_col)
-                    if bound is not None and not (
-                        isinstance(bound, float) and pd.isna(bound)
-                    ):
-                        try:
-                            bpolys = (
-                                [W.parse_wkt(bound)[1]]
-                                if W.parse_wkt(bound)[0] == "polygon"
-                                else list(W.parse_wkt(bound)[1])
-                            )
-                            if not any(
-                                G.polygons_intersect(poly, bp) for bp in bpolys
-                            ):
-                                err = "outside bounding polygon"
-                                poly = None
-                        except ValueError:
-                            pass
-                ids.append(row[id_col])
-                wkts.append(W.polygon_to_wkt(poly) if poly else None)
-                errs.append(err)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "geocoded_wkt": wkts,
-                    "geocode_error": errs,
-                }
-            )
-
-    return work.mapInPandas(
-        run, f"{id_col} long, geocoded_wkt string, geocode_error string"
+    return map_row_loop(
+        work,
+        lambda pdf: geocode_rows(
+            pdf, geocoder, query_col, bounding_wkt_col, min_delay_s
+        ),
+        id_col,
+        {"geocoded_wkt": "string", "geocode_error": "string"},
     )
 
 
 def full_geocode_waterfall(
-    alerts: DataFrame,
     suggestions: DataFrame,
     suburb_dim: DataFrame | None,
     street_dim: DataFrame | None,

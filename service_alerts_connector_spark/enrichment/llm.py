@@ -1,7 +1,8 @@
 """LLM enrichment stages (X1 post drafting, X2 location extraction).
 
 Re-expresses the reference's per-row HTTP loops
-(ServiceAlertAugmenter.py:226-409, 572-621) as ``mapInPandas`` operators:
+(ServiceAlertAugmenter.py:226-409, 572-621) as per-frame row loops, also
+wrapped as ``mapInPandas`` operators:
 
 * injectable client (tests inject :class:`StubLLMClient`; production injects
   an OpenAI-compatible HTTP client with the same protocol);
@@ -13,10 +14,11 @@ Re-expresses the reference's per-row HTTP loops
 * failures land in an ``llm_error`` column; the engine never ``sys.exit``s
   from an executor (SURVEY §7(e)).
 
-Concurrency/rate control: cap the number of partitions feeding this stage
-(``limit()`` upstream + ``coalesce(n)``) — global request rate is then
-bounded by partitions × per-row latency, the distributed analog of the
-reference's serial loop.
+Concurrency/rate control: a row loop (:func:`draft_rows`,
+:func:`locate_rows`) calls serially, so requests run one at a time per
+frame — on the driver in the augmenter, per partition in the operators.
+:func:`draft_posts`' admission cap plans one partition, and
+:func:`extract_locations` coalesces to ``max_partitions``.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from __future__ import annotations
 import hashlib
 import json
 from dataclasses import dataclass
-from typing import Callable, Iterator, Protocol
+from typing import Callable, Protocol
 
 import pandas as pd
 
@@ -37,6 +39,7 @@ from service_alerts_connector_spark.constants import (
     MAX_POST_LENGTH,
     PROMPT_LENGTH_LIMIT,
 )
+from service_alerts_connector_spark.enrichment import map_row_loop
 
 
 class LLMClient(Protocol):
@@ -199,6 +202,47 @@ def _call_with_retry(
     return None, last_err
 
 
+def _row_record(row: pd.Series) -> dict:
+    """A row's non-null cells; array cells are kept whole."""
+    return {
+        c: v
+        for c, v in row.items()
+        if v is not None and not (pd.api.types.is_scalar(v) and pd.isna(v))
+    }
+
+
+def draft_rows(
+    pdf: pd.DataFrame,
+    clients: list[LLMClient],
+    prompt_builder: Callable[[dict], str],
+    max_post_length: int = MAX_POST_LENGTH,
+    policy: RetryPolicy = RetryPolicy(),
+    shorten_builder: Callable[[str], str] | None = None,
+) -> tuple[list[str | None], list[str | None]]:
+    """X1 row loop — one post per row of ``pdf``, as (texts, errors).
+    Over-length drafts re-prompt through ``shorten_builder`` (default: the
+    packaged few-shot shorten template, Augmenter:217-223 semantics)."""
+    if shorten_builder is None:
+        shorten_builder = shorten_prompt_builder(max_post_length)
+    texts, errs = [], []
+    for _, row in pdf.iterrows():
+        prompt = prompt_builder(_row_record(row))
+        if estimate_tokens(prompt) > PROMPT_LENGTH_LIMIT:
+            text, err = None, "prompt too long"
+        else:
+            text, err = _call_with_retry(clients, prompt, policy)
+            if text and len(text) > max_post_length:
+                # shorten-reprompt (Augmenter:217-223)
+                text, err = _call_with_retry(
+                    clients, shorten_builder(text), policy
+                )
+                if text and len(text) > max_post_length:
+                    text, err = text[:max_post_length], "truncated"
+        texts.append(text)
+        errs.append(err)
+    return texts, errs
+
+
 def draft_posts(
     df: DataFrame,
     clients: list[LLMClient],
@@ -207,70 +251,77 @@ def draft_posts(
     max_post_length: int = MAX_POST_LENGTH,
     policy: RetryPolicy = RetryPolicy(),
     limit: int = DRAFT_LIMIT,
-    max_partitions: int = 4,
     shorten_builder: Callable[[str], str] | None = None,
 ) -> DataFrame:
-    """X1 — draft a social-media post per row.
-
-    ``df`` should already be capped upstream (ST5/DRAFT_LIMIT); this operator
-    re-caps defensively and coalesces to ``max_partitions`` so total external
-    concurrency is bounded.  Returns (Id, out_col, llm_error) for join-back —
-    the reference's point-writebacks (J9) become an enrichment join.
-
-    Over-length drafts re-prompt through ``shorten_builder`` (default: the
-    packaged few-shot shorten template, Augmenter:217-223 semantics).
+    """X1 — :func:`draft_rows` over the ``limit`` rows with the largest Ids,
+    as a ``mapInPandas``; returns (Id, out_col, llm_error).
     """
+    # built on the driver: executors never read the template file
     if shorten_builder is None:
         shorten_builder = shorten_prompt_builder(max_post_length)
     # Deterministic admission cap: the reference drafts for the most
     # RECENT alerts (positional tail of its frame); a bare limit()
     # admits an arbitrary partition-race subset, so make the recency
     # explicit — largest Id wins, planning TakeOrderedAndProject
-    # (per-partition partial top-k, no global sort).
-    work = (
-        df.orderBy(F.col(ID_COL).desc())
-        .limit(limit)
-        .coalesce(max_partitions)
+    # (per-partition partial top-k, no global sort) into one partition.
+    work = df.orderBy(F.col(ID_COL).desc()).limit(limit)
+    return map_row_loop(
+        work,
+        lambda pdf: draft_rows(
+            pdf, clients, prompt_builder, max_post_length, policy,
+            shorten_builder,
+        ),
+        ID_COL,
+        {out_col: "string", "llm_error": "string"},
     )
-    cols = work.columns
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_text, out_err = [], [], []
-            for _, row in pdf.iterrows():
-                rec = {
-                    c: row[c]
-                    for c in cols
-                    if row[c] is not None and not pd.isna(row[c])
-                }
-                prompt = prompt_builder(rec)
-                if estimate_tokens(prompt) > PROMPT_LENGTH_LIMIT:
-                    out_ids.append(row[ID_COL])
-                    out_text.append(None)
-                    out_err.append("prompt too long")
-                    continue
-                text, err = _call_with_retry(clients, prompt, policy)
-                if text and len(text) > max_post_length:
-                    # shorten-reprompt (Augmenter:217-223)
-                    text, err = _call_with_retry(
-                        clients, shorten_builder(text), policy
-                    )
-                    if text and len(text) > max_post_length:
-                        text, err = text[:max_post_length], "truncated"
-                out_ids.append(row[ID_COL])
-                out_text.append(text)
-                out_err.append(err)
-            yield pd.DataFrame(
-                {
-                    ID_COL: pd.Series(out_ids, dtype="int64"),
-                    out_col: out_text,
-                    "llm_error": out_err,
-                }
-            )
 
-    return work.mapInPandas(
-        run, f"{ID_COL} long, {out_col} string, llm_error string"
-    )
+def _repair_locations(text: str) -> list[list[str]] | None:
+    """Unwrap over-nested arrays, wrap flat ones, reject non-string leaves."""
+    try:
+        obj = json.loads(text)
+    except json.JSONDecodeError:
+        return None
+    # unwrap [[[...]]] → [[...]]
+    while (
+        isinstance(obj, list)
+        and len(obj) == 1
+        and isinstance(obj[0], list)
+        and obj[0]
+        and isinstance(obj[0][0], list)
+    ):
+        obj = obj[0]
+    # wrap ["a","b"] → [["a","b"]]
+    if isinstance(obj, list) and obj and all(isinstance(x, str) for x in obj):
+        obj = [obj]
+    if not isinstance(obj, list) or not all(
+        isinstance(g, list) and all(isinstance(x, str) for x in g)
+        for g in obj
+    ):
+        return None
+    return obj
+
+
+def locate_rows(
+    pdf: pd.DataFrame,
+    clients: list[LLMClient],
+    prompt_builder: Callable[[dict], str],
+    policy: RetryPolicy = RetryPolicy(),
+) -> tuple[list[list[list[str]] | None], list[str | None]]:
+    """X2 row loop — nested location suggestions per row of ``pdf``, as
+    (suggestions, errors).  JSON-shape repair mirrors the reference
+    (Augmenter:226-319); malformed responses land in the errors."""
+    locs, errs = [], []
+    for _, row in pdf.iterrows():
+        text, err = _call_with_retry(
+            clients, prompt_builder(_row_record(row)), policy
+        )
+        found = _repair_locations(text) if text else None
+        if text and found is None and err is None:
+            err = "malformed location JSON"
+        locs.append(found)
+        errs.append(err)
+    return locs, errs
 
 
 def extract_locations(
@@ -281,68 +332,13 @@ def extract_locations(
     policy: RetryPolicy = RetryPolicy(),
     max_partitions: int = 4,
 ) -> DataFrame:
-    """X2 — extract nested location suggestions (array<array<string>>).
-
-    JSON-shape repair mirrors the reference (Augmenter:226-319): unwrap
-    over-nested arrays, wrap flat arrays, reject non-string leaves;
-    malformed responses retry via the normal policy, then land in the error
-    column.
+    """X2 — :func:`locate_rows` as a ``mapInPandas`` over at most
+    ``max_partitions`` partitions; returns (Id, out_col
+    array<array<string>>, llm_error).
     """
-    work = df.coalesce(max_partitions)
-    cols = work.columns
-
-    def repair(text: str) -> list[list[str]] | None:
-        try:
-            obj = json.loads(text)
-        except json.JSONDecodeError:
-            return None
-        # unwrap [[[...]]] → [[...]]
-        while (
-            isinstance(obj, list)
-            and len(obj) == 1
-            and isinstance(obj[0], list)
-            and obj[0]
-            and isinstance(obj[0][0], list)
-        ):
-            obj = obj[0]
-        # wrap ["a","b"] → [["a","b"]]
-        if isinstance(obj, list) and obj and all(
-            isinstance(x, str) for x in obj
-        ):
-            obj = [obj]
-        if not isinstance(obj, list) or not all(
-            isinstance(g, list) and all(isinstance(x, str) for x in g)
-            for g in obj
-        ):
-            return None
-        return obj
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_locs, out_err = [], [], []
-            for _, row in pdf.iterrows():
-                rec = {
-                    c: row[c]
-                    for c in cols
-                    if row[c] is not None and not pd.isna(row[c])
-                }
-                text, err = _call_with_retry(
-                    clients, prompt_builder(rec), policy
-                )
-                locs = repair(text) if text else None
-                if text and locs is None and err is None:
-                    err = "malformed location JSON"
-                out_ids.append(row[ID_COL])
-                out_locs.append(locs)
-                out_err.append(err)
-            yield pd.DataFrame(
-                {
-                    ID_COL: pd.Series(out_ids, dtype="int64"),
-                    out_col: out_locs,
-                    "llm_error": out_err,
-                }
-            )
-
-    return work.mapInPandas(
-        run, f"{ID_COL} long, {out_col} array<array<string>>, llm_error string"
+    return map_row_loop(
+        df.coalesce(max_partitions),
+        lambda pdf: locate_rows(pdf, clients, prompt_builder, policy),
+        ID_COL,
+        {out_col: "array<array<string>>", "llm_error": "string"},
     )

@@ -104,37 +104,27 @@ def merge_processed(
     return processed.unionByName(kept, allowMissingColumns=True)
 
 
-def backfill_unfinished(
-    new: DataFrame,
-    kept: DataFrame | None,
+def backfill_sample(
+    kept: DataFrame,
     unfinished_predicate: str,
-    limit: int,
+    budget: int,
     order_col: str = "publish_date",
     seed: int = 42,
-) -> IncrementalSplit:
-    """ST5 — pull ≤ ``limit - count(new)`` cached rows that still lack
-    enrichment (e.g. null tweet) back into the work set.
+) -> DataFrame:
+    """ST5 — ≤ ``budget`` cached rows that still lack enrichment (e.g. null
+    tweet), to pull back into the work set.
 
     Reference ServiceAlertAugmenter.py:546-570 (``sort_values(by=
     publish_date).tail(n*2)`` — SURVEY W2): take the 2×n *most recent*
     unfinished cache rows, sample n of them.  The reference's
     ``DataFrame.sample`` is unseeded; the engine seeds it for reproducibility
-    (SURVEY §7(d)).  Count of `new` is a driver-side scalar — it gates an
-    expensive LLM stage, so one small count() job is the right trade.
+    (SURVEY §7(d)).  Collect the sample once and drop its Ids from the cache
+    side, so the work set and the cache see the same draw.
     """
-    if kept is None:
-        return IncrementalSplit(new=new, kept=kept)
-    budget = limit - new.count()
-    if budget <= 0:
-        return IncrementalSplit(new=new, kept=kept)
-    candidates = (
+    return (
         kept.filter(unfinished_predicate)
         .orderBy(F.desc(order_col))
         .limit(budget * 2)
-    )
-    moving = candidates.orderBy(F.rand(seed)).limit(budget)
-    moving_keys = moving.select(ID_COL)
-    remaining = kept.join(moving_keys, ID_COL, "left_anti")  # U2
-    return IncrementalSplit(
-        new=new.unionByName(moving, allowMissingColumns=True), kept=remaining
+        .orderBy(F.rand(seed))
+        .limit(budget)
     )

@@ -817,9 +817,7 @@ def semantic_dedup(
     # len(centroids[0]) IS the corpus dim — this removes a whole driver
     # job (the bounded head(1) Spark action) from every invocation
     # (guide §5: keep driver-side actions out of the query path).
-    if not centroids_milli or not centroids_milli[0]:
-        raise ValueError("centroids_milli must be non-empty")
-    dim = len(centroids_milli[0])
+    dim = _centroid_dim(centroids_milli)
     planes = seeded_hyperplanes(n_planes, dim, seed)
     # localCheckpoint pins ONE evaluation of the scan+quantize+assign
     # subtree: it feeds four downstream branches (band cells, both verify
@@ -932,6 +930,17 @@ def _dist_sql(xm_sql: str, c: "Sequence[int]") -> str:
     )
 
 
+def _centroid_dim(centroids_milli: list[list[int]]) -> int:
+    """The one dimension every pinned centroid shares."""
+    dims = {len(c) for c in centroids_milli}
+    if len(dims) != 1 or 0 in dims:
+        raise ValueError(
+            "centroids_milli must be non-empty and share one dimension, "
+            f"got dimensions {sorted(dims)}"
+        )
+    return dims.pop()
+
+
 def _assign_cells(
     df: DataFrame,
     centroids_milli: list[list[int]],
@@ -946,10 +955,22 @@ def _assign_cells(
     fold repeatedly (the cond AND both branches reference it), so each
     64-dim fold appears up to 2^(k-1) times in the final tree — measured
     ~20% of the whole query at sf0.1.  array_min over (d2, cell) structs
-    keeps the exact first-wins tie rule."""
+    keeps the exact first-wins tie rule.
+
+    A vector whose dimension differs from the centroids' fails its task:
+    ``zip_with`` would pad the shorter array with NULLs and make every
+    distance NULL, silently assigning an arbitrary cell."""
+    dim = _centroid_dim(centroids_milli)
+    vec = F.col(vec_col).cast("array<double>")
+    checked = F.when(
+        F.assert_true(
+            F.coalesce(F.size(vec) == dim, F.lit(True)),
+            f"{vec_col} dimension differs from the centroids' ({dim})",
+        ).isNull(),
+        vec,
+    )
     xm = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda v: F.floor(v * F.lit(1000.0)).cast("bigint"),
+        checked, lambda v: F.floor(v * F.lit(1000.0)).cast("bigint")
     )
     base = df.select(
         F.col(id_col).alias("_id"),

@@ -221,7 +221,8 @@ def overlay_inference(
        (``_bbox_prep`` — narrow, no shuffle);
     3. a uniform grid is sized from a one-row layer-extent aggregate
        (same ``sqrt(n)``-per-axis heuristic as ``geo.ops.GridIndex``,
-       ≤256 cells/axis — the only driver-side value is 7 scalars);
+       ≤256 cells/axis), broadcast-cross-joined onto both sides — nothing
+       reaches the driver, and building the DataFrame launches no job;
     4. each side explodes to its covered ``(cell_x, cell_y)`` keys
        JVM-side (``sequence`` + ``explode`` over floor-clamped bbox
        cells) and the candidate join is a plain shuffle equi-join on the
@@ -243,9 +244,9 @@ def overlay_inference(
     Sedona present the ST_Intersects range join takes over wholesale
     (``overlay_inference_sedona``).
 
-    Cost: the layer is scanned twice (extent agg + join side); both scans
-    are embarrassingly parallel and shuffle-free, which is the right trade
-    against materializing a parsed copy.
+    Cost: the layer is scanned twice in the one plan (extent aggregate +
+    join side); both scans are embarrassingly parallel and shuffle-free,
+    which is the right trade against materializing a parsed copy.
     """
     if use_sedona is None:
         use_sedona = HAVE_SEDONA
@@ -285,45 +286,51 @@ def overlay_inference(
         "_area double",
     )
 
-    # grid sizing: one-row aggregate over layer bboxes (7 scalars to the
-    # driver — the "tiny agg anchor" class, O(1) at any layer size)
-    ext = feats.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("_minx").alias("minx"), F.min("_miny").alias("miny"),
-        F.max("_maxx").alias("maxx"), F.max("_maxy").alias("maxy"),
-    ).first()
-    null_out = alerts.withColumn(
-        out_col, F.lit(None).cast("array<string>")
+    # grid sizing: a one-row aggregate over the layer bboxes, cross-joined
+    # onto both sides instead of collected, so building the plan launches
+    # no job.  An empty layer has no feature cells, so every zone is null.
+    n_axis = F.greatest(
+        F.lit(1),
+        F.least(F.lit(256), F.floor(F.sqrt(F.count(F.lit(1)))).cast("int")),
     )
-    if not ext or not ext["n"]:
-        return null_out
-    n_axis = max(1, min(256, int(ext["n"] ** 0.5)))
-    sx = ((ext["maxx"] - ext["minx"]) / n_axis) or 1.0
-    sy = ((ext["maxy"] - ext["miny"]) / n_axis) or 1.0
 
-    def cell(v, lo: float, step: float):
+    def width(hi: str, lo: str):
+        span = (F.max(hi) - F.min(lo)) / n_axis
+        return F.when(span == 0, F.lit(1.0)).otherwise(span)
+
+    grid = F.broadcast(
+        feats.agg(
+            F.min("_minx").alias("_gx"), F.min("_miny").alias("_gy"),
+            n_axis.alias("_na"),
+            width("_maxx", "_minx").alias("_sx"),
+            width("_maxy", "_miny").alias("_sy"),
+        )
+    )
+
+    def cell(v, lo: str, width: str):
         return F.least(
-            F.lit(n_axis - 1),
+            F.col("_na") - 1,
             F.greatest(
-                F.lit(0), F.floor((v - F.lit(lo)) / F.lit(step)).cast("int")
+                F.lit(0),
+                F.floor((v - F.col(lo)) / F.col(width)).cast("int"),
             ),
         )
 
     def with_cells(df: DataFrame) -> DataFrame:
-        return df.withColumn(
+        return df.crossJoin(grid).withColumn(
             "_cx",
             F.explode(
                 F.sequence(
-                    cell(F.col("_minx"), ext["minx"], sx),
-                    cell(F.col("_maxx"), ext["minx"], sx),
+                    cell(F.col("_minx"), "_gx", "_sx"),
+                    cell(F.col("_maxx"), "_gx", "_sx"),
                 )
             ),
         ).withColumn(
             "_cy",
             F.explode(
                 F.sequence(
-                    cell(F.col("_miny"), ext["miny"], sy),
-                    cell(F.col("_maxy"), ext["miny"], sy),
+                    cell(F.col("_miny"), "_gy", "_sy"),
+                    cell(F.col("_maxy"), "_gy", "_sy"),
                 )
             ),
         )
@@ -337,7 +344,7 @@ def overlay_inference(
         "_area double",
     )
     a_cells = with_cells(aprep).select(
-        footprint_col, "_cx", "_cy",
+        footprint_col, "_cx", "_cy", "_gx", "_gy", "_sx", "_sy", "_na",
         F.col("_minx").alias("_aminx"), F.col("_miny").alias("_aminy"),
         F.col("_maxx").alias("_amaxx"), F.col("_maxy").alias("_amaxy"),
         F.col("_area").alias("_aarea"),
@@ -364,9 +371,9 @@ def overlay_inference(
         # no distinct shuffle
         .where(
             (F.col("_cx")
-             == cell(F.greatest("_aminx", "_fminx"), ext["minx"], sx))
+             == cell(F.greatest("_aminx", "_fminx"), "_gx", "_sx"))
             & (F.col("_cy")
-               == cell(F.greatest("_aminy", "_fminy"), ext["miny"], sy))
+               == cell(F.greatest("_aminy", "_fminy"), "_gy", "_sy"))
         )
         .select(footprint_col, "_aarea", "_fname", "_fwkt", "_farea")
     )
@@ -434,13 +441,10 @@ def overlay_inference(
     return alerts.join(inferred, footprint_col, "left")
 
 
-def exclude_area_types(
-    df: DataFrame, area_type_col: str = "area_type"
-) -> DataFrame:
-    """P9 — drop rows whose area_type is excluded from spatial work."""
-    return df.where(
-        ~F.coalesce(F.col(area_type_col), F.lit("")).isin(*AREA_TYPE_EXCLUSION)
-    )
+def excluded_area_type(area_type: pd.Series) -> pd.Series:
+    """P9 — True where an alert's area type is excluded from spatial work
+    (a null area type is not excluded)."""
+    return area_type.isin(AREA_TYPE_EXCLUSION)
 
 
 def fuzzy_street_match(

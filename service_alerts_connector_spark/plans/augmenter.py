@@ -1,27 +1,32 @@
 """The Augmenter — silver → gold (incremental enrichment).
 
-Re-expresses ServiceAlertAugmenter.py's lifecycle (SURVEY §3.2) as a
-declarative pipeline:
+Re-expresses ServiceAlertAugmenter.py's lifecycle (SURVEY §3.2) as the
+reference runs it: one pass that enriches each admitted alert once
+(ServiceAlertAugmenter.py:572-621, pandas over ≤ DATA_SIZE_LIMIT rows):
 
-1. checksum incremental split vs the previous gold (ST2/ST3), admission cap,
-   backfill of unfinished drafts (ST5);
-2. LLM post drafting (X1) on the capped work set → join-back (J9-as-join);
+1. checksum incremental split vs the previous gold (ST2/ST3), admission
+   cap and area polygon lookup (J4), collected once; backfill of unfinished
+   drafts (ST5) is one more collect, whose Ids leave the cache side;
+2. on that frame, LLM post drafting (X1) and the footprint: the area
+   polygon, else the geocode tail (X3) or the LLM location suggestions
+   (X2) + geocode waterfall; none for excluded area types (P9);
 3. toot derivation (J3 hashtag map + F16 concat);
-4. geospatial: area polygon lookup (J4), LLM location suggestions (X2) +
-   geocode waterfall (X3) for footprint; overlay inference of suburbs/wards
-   (J5 + A1);
+4. overlay inference of suburbs/wards (J5 + A1) and map-image links (X4);
 5. union with the untouched cache and return the new gold DataFrame.
 
-External services are injected (LLM clients, geocoder); defaults are the
-deterministic stubs so the whole plan runs hermetically in tests.
+External services are injected (LLM clients, geocoder) and called serially
+on the driver; defaults are the deterministic stubs so the whole plan runs
+hermetically in tests.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from service_alerts_connector_spark.constants import (
     AUGMENTER_SALT,
@@ -32,16 +37,21 @@ from service_alerts_connector_spark.constants import (
 from service_alerts_connector_spark.enrichment.geocode import (
     Geocoder,
     StubGeocoder,
-    geocode_tail,
+    full_geocode_waterfall,
+    geocode_rows,
 )
+from service_alerts_connector_spark.enrichment.images import with_image_links
 from service_alerts_connector_spark.enrichment.llm import (
     LLMClient,
     StubLLMClient,
-    draft_posts,
+    draft_rows,
+    locate_rows,
+    location_prompt_builder,
+    summary_prompt_builder,
 )
 from service_alerts_connector_spark.functions.cleaning import toot_from_tweet
 from service_alerts_connector_spark.operators.incremental import (
-    backfill_unfinished,
+    backfill_sample,
     merge_processed,
     split_incremental,
     with_checksum,
@@ -49,7 +59,7 @@ from service_alerts_connector_spark.operators.incremental import (
 from service_alerts_connector_spark.operators.joins import map_lookup
 from service_alerts_connector_spark.operators.spatial import (
     area_lookup_join,
-    exclude_area_types,
+    excluded_area_type,
     overlay_inference,
 )
 
@@ -99,10 +109,13 @@ def augment(
     street_layer: DataFrame | None = None,
     config: AugmenterConfig | None = None,
 ) -> DataFrame:
-    """Run the full augmentation stage; returns the new gold DataFrame."""
+    """Run the full augmentation stage; returns the new gold DataFrame.
+    The external services are called before it returns."""
     cfg = config or AugmenterConfig()
+    spark = silver.sparkSession
 
-    # 1 — incremental admission (ST2-ST5)
+    # 1 — incremental admission (ST2-ST5) + area polygon lookup (J4), one
+    # collect of the capped work set; its size sets the backfill budget
     stamped = with_checksum(
         silver, checksum_columns(silver), salt=cfg.salt
     )
@@ -112,28 +125,51 @@ def augment(
         limit=cfg.data_size_limit,
         order_col="_ingest_seq",
     )
-    split = backfill_unfinished(
-        split.new,
-        split.kept,
-        "tweet_text IS NULL",
-        limit=cfg.draft_limit,
-        order_col="publish_date",
-    )
-    work, kept = split.new, split.kept
+    kept = split.kept
 
-    # 2 — LLM drafting (X1) joined back (J9-as-join); packaged few-shot
-    # summary template (resources/summary_prompt.yaml.jinja2)
-    from service_alerts_connector_spark.enrichment.llm import (
-        summary_prompt_builder,
-    )
+    def located(df: DataFrame) -> DataFrame:
+        return df if gis_areas is None else area_lookup_join(df, gis_areas)
 
-    drafts = draft_posts(
-        work,
-        cfg.llm_clients,
-        summary_prompt_builder(),
-        limit=cfg.draft_limit,
-    ).drop("llm_error")
-    work = work.drop("tweet_text").join(drafts, ID_COL, "left")
+    fields = list(split.new.schema.fields)
+    frame = located(split.new).toPandas()
+    budget = cfg.draft_limit - len(frame)
+    if kept is not None and budget > 0:
+        moved = located(
+            backfill_sample(kept, "tweet_text IS NULL", budget)
+        ).toPandas()
+        if len(moved):
+            kept = kept.where(~F.col(ID_COL).isin(moved[ID_COL].tolist()))
+            fields += [
+                f for f in kept.schema.fields if f.name not in split.new.columns
+            ]
+            frame = pd.concat(
+                [p for p in (frame, moved) if len(p)], ignore_index=True
+            )
+    names = [f.name for f in fields]
+
+    # 2 — enrich each admitted alert once: LLM drafts (X1) for the newest
+    # draft_limit rows (packaged few-shot summary template), then footprints
+    drafted = frame[ID_COL].nlargest(cfg.draft_limit).index
+    texts, _ = draft_rows(
+        frame.loc[drafted, names], cfg.llm_clients, summary_prompt_builder()
+    )
+    frame["tweet_text"] = None
+    frame.loc[drafted, "tweet_text"] = texts
+    if gis_areas is not None:
+        spatial = ~excluded_area_type(frame["area_type"])
+        tail = frame[spatial & frame["area_wkt"].isna()]
+        footprint = frame["area_wkt"].where(spatial, None)
+        footprint[tail.index] = _geocode(
+            spark, tail, cfg, suburb_layer, street_layer
+        )
+        frame["geospatial_footprint"] = footprint
+    schema = T.StructType(fields + [
+        T.StructField(c, T.StringType())
+        for c in ("tweet_text", "geospatial_footprint") if c not in names
+    ])
+    work = spark.createDataFrame(
+        frame.reindex(columns=schema.fieldNames()), schema
+    )
 
     # 3 — toot derivation (J3 + F16)
     work = work.withColumn(
@@ -143,84 +179,51 @@ def augment(
             map_lookup(F.col("service_area"), SERVICE_AREA_HASHTAGS),
         ),
     )
-
-    # 4 — geospatial footprint: area polygon lookup (J4), geocode tail (X3)
-    if gis_areas is not None:
-        spatial_work = exclude_area_types(work)
-        located = area_lookup_join(spatial_work, gis_areas)
-        resolved = located.where(F.col("area_wkt").isNotNull()).select(
-            ID_COL, F.col("area_wkt").alias("geospatial_footprint")
-        )
-        unresolved = located.where(F.col("area_wkt").isNull())
-        if cfg.location_clients is not None:
-            # X2 + full waterfall: LLM suggests locations; each suggestion
-            # resolves through suburb → street → geocoder tiers; per-alert
-            # union into a MULTIPOLYGON (A6)
-            from service_alerts_connector_spark.enrichment.geocode import (
-                full_geocode_waterfall,
-            )
-            from service_alerts_connector_spark.enrichment.llm import (
-                extract_locations,
-            )
-
-            from service_alerts_connector_spark.enrichment.llm import (
-                location_prompt_builder,
-            )
-
-            suggestions = extract_locations(
-                unresolved.select(ID_COL, "description", "area", "location"),
-                cfg.location_clients,
-                location_prompt_builder(),
-            ).drop("llm_error")
-            geocoded = full_geocode_waterfall(
-                unresolved,
-                suggestions,
-                suburb_dim=suburb_layer,
-                street_dim=street_layer,
-                geocoder=cfg.geocoder,
-                min_delay_s=cfg.geocoder_delay_s,
-            )
-        else:
-            geocoded = geocode_tail(
-                unresolved,
-                cfg.geocoder,
-                bounding_wkt_col=None,
-                min_delay_s=cfg.geocoder_delay_s,
-            ).select(
-                ID_COL, F.col("geocoded_wkt").alias("geospatial_footprint")
-            )
-        footprints = resolved.unionByName(geocoded)
-        work = work.drop("geospatial_footprint").join(
-            footprints, ID_COL, "left"
-        )
-    elif "geospatial_footprint" not in work.columns:
-        work = work.withColumn(
-            "geospatial_footprint", F.lit(None).cast("string")
-        )
-
-    # 5 — overlay inference of suburbs / wards (J5 + A1)
-    if suburb_layer is not None:
-        work = work.drop("inferred_suburbs")
-        work = overlay_inference(work, suburb_layer, "inferred_suburbs")
-    elif "inferred_suburbs" not in work.columns:
-        work = work.withColumn(
-            "inferred_suburbs", F.lit(None).cast("array<string>")
-        )
-    if ward_layer is not None:
-        work = work.drop("inferred_wards")
-        work = overlay_inference(work, ward_layer, "inferred_wards")
-    elif "inferred_wards" not in work.columns:
-        work = work.withColumn(
-            "inferred_wards", F.lit(None).cast("array<string>")
-        )
-
-    # 6 — content-addressed map-image links (X4 cache keys; rendering is an
-    # edge side effect driven separately via images.missing_images)
-    from service_alerts_connector_spark.enrichment.images import (
-        with_image_links,
-    )
-
+    # 4 — overlay inference of suburbs / wards (J5 + A1), content-addressed
+    # map-image links (X4 cache keys; rendering is an edge side effect
+    # driven separately via images.missing_images)
+    for layer, col in (
+        (suburb_layer, "inferred_suburbs"),
+        (ward_layer, "inferred_wards"),
+    ):
+        if layer is not None:
+            work = overlay_inference(work.drop(col), layer, col)
+        elif col not in work.columns:
+            work = work.withColumn(col, F.lit(None).cast("array<string>"))
     work = with_image_links(work.drop("image_filename"))
 
-    # 7 — merge with the untouched cache (ST3/ST4)
+    # 5 — merge with the untouched cache (ST3/ST4)
     return merge_processed(work, kept)
+
+
+def _geocode(
+    spark: SparkSession,
+    tail: pd.DataFrame,
+    cfg: AugmenterConfig,
+    suburb_layer: DataFrame | None,
+    street_layer: DataFrame | None,
+) -> list[str | None]:
+    """Footprints of the alerts no area polygon matched: the geocode tail
+    (X3), or with location clients the suggestion waterfall (X2 + X3:
+    suburb → street → geocoder tiers, unioned per alert, A6)."""
+    if cfg.location_clients is None or tail.empty:
+        wkts, _ = geocode_rows(
+            tail, cfg.geocoder, min_delay_s=cfg.geocoder_delay_s
+        )
+        return wkts
+    suggested, _ = locate_rows(
+        tail[[ID_COL, "description", "area", "location"]],
+        cfg.location_clients,
+        location_prompt_builder(),
+    )
+    suggestions = spark.createDataFrame(
+        tail[[ID_COL]].assign(suggested_locations=suggested),
+        f"{ID_COL} long, suggested_locations array<array<string>>",
+    )
+    found = dict(
+        full_geocode_waterfall(
+            suggestions, suburb_layer, street_layer, cfg.geocoder,
+            min_delay_s=cfg.geocoder_delay_s,
+        ).collect()
+    )
+    return [found.get(i) for i in tail[ID_COL]]

@@ -4,6 +4,12 @@ null publish dates)."""
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from pathlib import Path
+
+from service_alerts_connector_spark.enrichment.geocode import StubGeocoder
+from service_alerts_connector_spark.enrichment.llm import StubLLMClient
+
 RAW_ALERTS = [
     {
         "Id": 23121,
@@ -158,3 +164,32 @@ def jobs_launched(spark, fn) -> int:
     before = scheduler.numTotalJobs()
     fn()
     return scheduler.numTotalJobs() - before
+
+
+# Service doubles that log one line per call to a file: clients are pickled
+# into Python workers, so an in-memory counter would see no worker call.
+@dataclass(frozen=True)
+class CountingLLM:
+    path: str
+    mode: str = "draft"
+
+    def complete(self, prompt: str, temperature: float) -> str:
+        with open(self.path, "a") as f:
+            f.write("call\n")
+        return StubLLMClient(self.mode).complete(prompt, temperature)
+
+
+@dataclass(frozen=True)
+class CountingGeocoder:
+    path: str
+
+    def geocode(self, query: str):
+        with open(self.path, "a") as f:
+            f.write(query + "\n")
+        return StubGeocoder().geocode(query)
+
+
+def calls(path) -> list[str]:
+    """The lines a counting double logged, one per call."""
+    p = Path(path)
+    return p.read_text().splitlines() if p.exists() else []

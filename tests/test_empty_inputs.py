@@ -252,6 +252,26 @@ def test_round9_operators_on_empty_input(spark):
     assert len(got) == 1 and got[0]["kept"] is True  # singleton survives
 
 
+def test_semantic_dedup_rejects_mismatched_dims(spark):
+    """Ragged centroids fail at build time, and a vector whose dim differs
+    from the centroids' fails its task — zip_with would otherwise pad with
+    NULLs and assign it a cell by a NULL distance."""
+    import pytest
+
+    from service_alerts_connector_spark.operators.similarity import (
+        semantic_dedup,
+    )
+
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="one dimension"):
+        semantic_dedup(vecs, [[1000, 0, 0, 0], [0, 1000, 0]])
+    with pytest.raises(Exception, match="dimension differs"):
+        semantic_dedup(vecs, [[1000, 0, 0], [0, 1000, 0]]).collect()
+
+
 def test_round9_operators_partitioning_invariant(spark):
     """Same answers under any input partitioning (the distributed-
     determinism claim both round-9 drop rules make)."""

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from service_alerts_connector_spark.constants import CHECKSUM_COL
 from service_alerts_connector_spark.operators.incremental import (
-    backfill_unfinished,
+    backfill_sample,
     merge_processed,
     split_incremental,
     with_checksum,
@@ -85,25 +85,26 @@ def test_merge_processed_union(spark):
 
 
 def test_backfill_unfinished(spark):
-    cols = ["Id", "title"]
-    new = with_checksum(_df(spark, [(10, "n", 10, None)]), cols)
     kept = with_checksum(
         _df(
             spark,
             [(1, "a", 0, None), (2, "b", 1, None), (3, "c", 2, "done")],
         ),
-        cols,
+        ["Id", "title"],
     )
-    split = backfill_unfinished(
-        new, kept, "tweet_text IS NULL", limit=3, order_col="_ingest_seq"
-    )
-    new_ids = sorted(r["Id"] for r in split.new.collect())
-    kept_ids = sorted(r["Id"] for r in split.kept.collect())
-    # 10 plus both unfinished cached rows move into the work set
-    assert new_ids == [1, 2, 10]
-    assert kept_ids == [3]
-    # no row lost or duplicated overall
-    assert sorted(new_ids + kept_ids) == [1, 2, 3, 10]
+
+    def drawn(budget):
+        return sorted(
+            r["Id"]
+            for r in backfill_sample(
+                kept, "tweet_text IS NULL", budget, order_col="_ingest_seq"
+            ).collect()
+        )
+
+    # both unfinished cached rows fit the budget; the finished one never moves
+    assert drawn(2) == drawn(5) == [1, 2]
+    # a budget of 1 draws one of them, the same one every time (seeded)
+    assert drawn(1) in ([1], [2]) and drawn(1) == drawn(1)
 
 
 def test_skip_set_blanks_checksum(spark):

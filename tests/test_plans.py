@@ -2,9 +2,16 @@
 
 from __future__ import annotations
 
+import hashlib
+import json
+
+import pytest
 from pyspark.sql import functions as F
 
-from service_alerts_connector_spark.plans.augmenter import augment
+from service_alerts_connector_spark.plans.augmenter import (
+    AugmenterConfig,
+    augment,
+)
 from service_alerts_connector_spark.plans.emailer import (
     EXAMPLE_EMAIL_CONFIGS,
     email_key,
@@ -19,7 +26,13 @@ from service_alerts_connector_spark.sources.multimodal import (
     exact_media_dedup,
     media_features,
 )
-from tests.fixtures import RAW_ALERTS, jobs_launched
+from tests.fixtures import (
+    RAW_ALERTS,
+    CountingGeocoder,
+    CountingLLM,
+    calls,
+    jobs_launched,
+)
 
 
 def _silver(spark):
@@ -69,7 +82,6 @@ def test_augment_with_gis(spark):
 
 def test_augment_with_location_waterfall(spark):
     from service_alerts_connector_spark.enrichment.llm import StubLLMClient
-    from service_alerts_connector_spark.plans.augmenter import AugmenterConfig
 
     gis = spark.createDataFrame(
         [("NO MATCH", "NOWHERE", "POLYGON ((9 9, 10 9, 10 10, 9 10, 9 9))")],
@@ -98,6 +110,154 @@ def test_augment_with_location_waterfall(spark):
     # geocoder tail (stub suggestions won't match suburb/street names)
     fps = [r["geospatial_footprint"] for r in rows.values() if r["geospatial_footprint"]]
     assert fps and all(fp.startswith("MULTIPOLYGON") for fp in fps)
+
+
+def _grid(spark, prefix, nx, ny):
+    """(name, WKT) rectangles tiling the stub geocoder's extent."""
+    x0, y0, w, h = 18.3, -34.3, 0.52 / nx, 0.42 / ny
+    rows = []
+    for i in range(nx):
+        for j in range(ny):
+            a, b = x0 + i * w, y0 + j * h
+            rows.append(
+                (
+                    f"{prefix}{i}_{j}",
+                    f"POLYGON (({a} {b}, {a + w} {b}, {a + w} {b + h}, "
+                    f"{a} {b + h}, {a} {b}))",
+                )
+            )
+    return spark.createDataFrame(rows, "name string, WKT string")
+
+
+def _city(spark, tmp_path, waterfall=False):
+    """Parquet-backed silver plus city-shaped layers: an 8×8 suburb grid, a
+    4×4 ward grid, and a GIS area table no alert matches, so each of the
+    three non-citywide fixture alerts takes the geocode tail."""
+    _silver(spark).write.parquet(str(tmp_path / "silver"))
+    kw = {
+        "silver": spark.read.parquet(str(tmp_path / "silver")),
+        "suburb_layer": _grid(spark, "SUBURB_", 8, 8),
+        "ward_layer": _grid(spark, "WARD_", 4, 4),
+        "gis_areas": spark.createDataFrame(
+            [("Official Planning Suburb", "NO SUCH AREA",
+              _grid(spark, "X", 1, 1).first()["WKT"])],
+            "area_type string, area string, WKT string",
+        ),
+        "config": AugmenterConfig(
+            llm_clients=[CountingLLM(str(tmp_path / "llm"))],
+            geocoder=CountingGeocoder(str(tmp_path / "geo")),
+        ),
+    }
+    if waterfall:
+        kw["config"].location_clients = [
+            CountingLLM(str(tmp_path / "loc"), "locations")
+        ]
+        kw["street_layer"] = spark.createDataFrame(
+            [("Main Road", "LINESTRING (18.31 -34.29, 18.32 -34.28)")],
+            "street_name string, WKT string",
+        )
+    return kw
+
+
+def _digest(df):
+    rows = sorted(
+        (r.asDict(recursive=True) for r in df.collect()), key=lambda r: r["Id"]
+    )
+    blob = json.dumps(rows, default=str, sort_keys=True)
+    return hashlib.md5(blob.encode()).hexdigest()[:12]
+
+
+# Gold over the fixture as the join-back augmenter wrote it (whole-row
+# digests), and its enrichment values in the default configuration.
+GOLD_DIGEST = {False: "294ad22869f6", True: "02cbbd45850b"}
+GOLD_ENRICHMENT = {
+    23121: ("288ff0c40033", "POLYGON ((18.4435 -34.1532, 18.4535 -34.1532, "
+            "18.4535 -34.1432, 18.4435 -34.1432, 18.4435 -34.1532))",
+            ["SUBURB_2_2"], ["WARD_1_1"]),
+    23122: ("5df6cb9df174", "POLYGON ((18.421 -34.0568, 18.431 -34.0568, "
+            "18.431 -34.0468, 18.421 -34.0468, 18.421 -34.0568))",
+            ["SUBURB_1_4", "SUBURB_2_4"], ["WARD_0_2", "WARD_1_2"]),
+    23123: ("f0ba10a57457", None, None, None),  # citywide: no spatial work
+    23125: ("8603563a3779", "POLYGON ((18.4955 -33.9276, 18.5055 -33.9276, "
+            "18.5055 -33.9176, 18.4955 -33.9176, 18.4955 -33.9276))",
+            ["SUBURB_3_7"], ["WARD_1_3"]),
+}
+
+
+@pytest.mark.parametrize("waterfall", [False, True])
+def test_augment_calls_each_service_once_per_alert(spark, tmp_path, waterfall):
+    """Each external service sees each admitted alert once: 4 drafts for 4
+    alerts, and one geocode per located alert (default) or per suggested
+    location (waterfall).  The join-back plan drafted 8 times and geocoded
+    6 times in the default configuration.  Gold is unchanged."""
+    gold = augment(**_city(spark, tmp_path, waterfall))
+    assert _digest(gold) == GOLD_DIGEST[waterfall]
+    assert len(calls(tmp_path / "llm")) == 4
+    geocoded = calls(tmp_path / "geo")
+    assert len(geocoded) == len(set(geocoded))
+    if waterfall:
+        # three located alerts, two stub suggestions each
+        assert len(calls(tmp_path / "loc")) == 3
+        assert len(geocoded) == 6
+    else:
+        assert len(geocoded) == 3
+        got = {
+            r["Id"]: (
+                r["tweet_text"] and r["tweet_text"].split()[3][:-1],
+                r["geospatial_footprint"],
+                r["inferred_suburbs"],
+                r["inferred_wards"],
+            )
+            for r in gold.collect()
+        }
+        assert got == GOLD_ENRICHMENT
+
+
+def test_augment_job_counts_and_nothing_cached(spark, tmp_path):
+    """Building the gold DataFrame launches the work-set collect only, and
+    writing it runs the Spark tail (toot, overlays, image links, merge);
+    nothing stays persisted.  The join-back plan launched 4 + 19."""
+    kw = _city(spark, tmp_path)
+    persisted = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    built = {}
+    assert jobs_launched(spark, lambda: built.update(gold=augment(**kw))) == 2
+    assert jobs_launched(
+        spark, lambda: built["gold"].write.parquet(str(tmp_path / "gold"))
+    ) == 13
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == persisted
+
+
+def test_augment_backfills_unfinished_cached_rows(spark, tmp_path):
+    """ST5: with nothing changed upstream, cached rows that lack a draft
+    come back into the work set once, are drafted and located again, and
+    are not also passed through from the cache.  23122's cached row holds
+    a two-suburb array, which its prompt record keeps whole."""
+    kw = _city(spark, tmp_path)
+    gold1 = augment(**kw)
+    unfinished = (23122, 23125)
+    gold1.withColumn(
+        "tweet_text",
+        F.when(F.col("Id").isin(*unfinished), None).otherwise(
+            F.col("tweet_text")
+        ),
+    ).write.parquet(str(tmp_path / "gold1"))
+    before = {r["Id"]: r.asDict() for r in gold1.collect()}
+    for name in ("llm", "geo"):
+        (tmp_path / name).unlink()
+    gold2 = augment(
+        previous_gold=spark.read.parquet(str(tmp_path / "gold1")), **kw
+    )
+    after = [r.asDict() for r in gold2.collect()]
+    assert len(calls(tmp_path / "llm")) == len(calls(tmp_path / "geo")) == 2
+    assert sorted(r["Id"] for r in after) == sorted(before)
+    for r in after:
+        old = before[r["Id"]]
+        if r["Id"] in unfinished:
+            assert r["tweet_text"] and r["toot_text"].startswith(r["tweet_text"])
+            for col in ("geospatial_footprint", "inferred_suburbs"):
+                assert r[col] == old[col]
+        else:
+            assert r == old
 
 
 def test_emailer_fanout_and_sent_dedup(spark):

@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import pandas as pd
+
 from service_alerts_connector_spark.operators.spatial import (
     area_lookup_join,
-    exclude_area_types,
+    excluded_area_type,
     fuzzy_street_match,
     overlay_inference,
 )
@@ -62,9 +64,13 @@ def test_overlay_inference_threshold(spark):
     assert out[3] is None  # no footprint
 
 
-def test_exclude_area_types(spark):
-    kept = sorted(r["Id"] for r in exclude_area_types(_alerts(spark)).collect())
-    assert kept == [1, 2]
+def test_exclude_area_types():
+    area_types = pd.Series(
+        [a for _, a, _, _ in ALERTS] + [None, "Driving Licence Testing Centre"]
+    )
+    assert excluded_area_type(area_types).tolist() == [
+        False, False, True, False, True,
+    ]
 
 
 def test_fuzzy_street_match(spark):
@@ -144,3 +150,32 @@ def test_sedona_branch_matches_fallback(spark):  # pragma: no cover
         _alerts(spark), _layer(spark), "x", use_sedona=False
     ).collect()
     assert sorted(map(str, sed)) == sorted(map(str, fb))
+
+
+def test_overlay_construction_launches_no_job(spark, tmp_path):
+    """The grid extent is a cross-joined one-row aggregate, not a driver
+    probe: building the overlay over a parquet layer runs no Spark job."""
+    from tests.fixtures import jobs_launched
+
+    _layer(spark).write.parquet(str(tmp_path / "layer"))
+    layer = spark.read.parquet(str(tmp_path / "layer"))
+    built = {}
+    assert jobs_launched(
+        spark,
+        lambda: built.update(
+            out=overlay_inference(_alerts(spark), layer, "zones", use_sedona=False)
+        ),
+    ) == 0
+    zones = {r["Id"]: r["zones"] for r in built["out"].collect()}
+    assert zones[1] == ["OBSERVATORY", "SALT RIVER"] and zones[3] is None
+
+
+def test_overlay_empty_layer_zones_are_null(spark, tmp_path):
+    spark.createDataFrame([], "name string, WKT string").write.parquet(
+        str(tmp_path / "empty")
+    )
+    layer = spark.read.parquet(str(tmp_path / "empty"))
+    out = overlay_inference(_alerts(spark), layer, "zones", use_sedona=False)
+    assert {r["Id"]: r["zones"] for r in out.collect()} == {
+        1: None, 2: None, 3: None,
+    }

@@ -13,9 +13,6 @@ from service_alerts_connector_spark.plans.emailer import (
 
 
 def test_full_geocode_waterfall_tiers(spark):
-    alerts = spark.createDataFrame(
-        [(1,), (2,), (3,)], "Id long"
-    )
     suggestions = spark.createDataFrame(
         [
             (1, [["Observatory", "Main Road"]]),  # tier1 + tier2 hits
@@ -38,7 +35,7 @@ def test_full_geocode_waterfall_tiers(spark):
     out = {
         r["Id"]: r["geospatial_footprint"]
         for r in full_geocode_waterfall(
-            alerts, suggestions, suburbs, streets, StubGeocoder()
+            suggestions, suburbs, streets, StubGeocoder()
         ).collect()
     }
     # alert 1: suburb polygon + street-segment bbox union → MULTIPOLYGON
