@@ -255,12 +255,13 @@ def bboxes_overlap(
 
 
 class GridIndex:
-    """Uniform-grid spatial index over feature bboxes.
+    """Uniform-grid spatial index over bboxes.
 
-    Built once per task from the broadcast layer; ``candidates(bbox)``
-    returns only the feature indices whose grid cells overlap the query
-    bbox, cutting the exact-geometry candidate set from O(features) to
-    O(features in nearby cells).  This is the single-node analogue of the
+    ``operators.spatial.overlay_footprints`` builds one per task over the
+    work set's footprint bboxes and queries it with each streamed layer
+    feature; ``candidates(bbox)`` returns only the indices whose grid
+    cells overlap the query bbox, cutting the exact-geometry candidate set
+    from O(footprints) to O(footprints in nearby cells).  This is the single-node analogue of the
     spatial partitioning Sedona's ST_Intersects join does cluster-wide
     (reference overlay: ServiceAlertAugmenter.py:649-681 relies on
     geopandas' R-tree for the same pruning).

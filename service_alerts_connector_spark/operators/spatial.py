@@ -1,14 +1,20 @@
 """Spatial operators (SURVEY J4-J7, A6, F19-F20) — Sedona-shaped semantics
 on the pure-Python geo fallback.
 
-Execution model: the overlay (J5/J6) is a **grid-keyed equi-join** — both
-the GIS layer and the alert footprints stay DataFrames end-to-end, exploded
-to covered grid cells and joined on the cell key, with the exact planar
-kernels (``geo/ops.py``) running per joined pair inside Arrow batches.
-Nothing is collected to the driver, so a country-scale layer shuffles like
-any other fact-fact join instead of OOMing.  Name-keyed lookups (J4) and
-the fuzzy street dimension (J7) remain broadcast joins — genuinely small
-dimensions.
+Execution model: the overlay (J5/J6) has two paths that share one WKT
+parse (``_shape``) and one 5% rule (``_overlaps``), and neither collects
+the GIS layer to the driver:
+
+* ``overlay_inference``, the catalog-scale path, is a **grid-keyed
+  equi-join**: the layer and the alert footprints stay DataFrames
+  end-to-end, exploded to covered grid cells and joined on the cell key,
+  so a country-scale layer shuffles like any other fact-fact join;
+* ``overlay_footprints`` serves a caller that already holds a small work
+  set's footprints on the driver (the augmenter): they ride in the task
+  closure and the layer streams past them in one ``mapInPandas``.
+
+Name-keyed lookups (J4) and the fuzzy street dimension (J7) remain
+broadcast joins — genuinely small dimensions.
 
 With Apache Sedona installed the overlay compiles to ST_* expression range
 joins instead (spatially partitioned by Sedona's optimizer); the operator
@@ -18,7 +24,7 @@ module.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import pandas as pd
 
@@ -61,6 +67,49 @@ def _to_polys(wkt_str: str) -> list[W.Polygon]:
         minx, miny, maxx, maxy = G.bbox(shape)  # type: ignore[arg-type]
         return [G.bbox_polygon(minx - 1e-4, miny - 1e-4, maxx + 1e-4, maxy + 1e-4)]
     raise ValueError(kind)
+
+
+Shape = tuple[list[W.Polygon], tuple[float, float, float, float], float]
+
+
+def _shape(wkt_str) -> Shape | None:
+    """WKT → (polygons, bbox, area); None for a null, unparseable or empty
+    geometry, which no overlay path ever matches."""
+    if not isinstance(wkt_str, str):
+        return None
+    try:
+        polys = _to_polys(wkt_str)
+        box = G.merge_bboxes([G.bbox(p[0]) for p in polys if p])
+    except ValueError:
+        return None
+    if box is None:
+        return None
+    return polys, box, sum(G.polygon_area(p) for p in polys)
+
+
+def _shape_memo():
+    """``_shape`` behind a task-lifetime memo: zone grids and tile layers
+    repeat a small vocabulary of WKT strings (the catalog fixture has 1.6 k
+    distinct alert boxes over 15 k rows, 25 features), so each distinct
+    string is parsed once per task instead of once per row or pair."""
+    memo: dict[str, Shape | None] = {}
+
+    def shape(wkt_str) -> Shape | None:
+        if wkt_str not in memo:
+            memo[wkt_str] = _shape(wkt_str)
+        return memo[wkt_str]
+
+    return shape
+
+
+def _overlaps(a: Shape, f: Shape, min_overlap: float) -> bool:
+    """The reference's 5% rule (ServiceAlertAugmenter.py:649-681): the exact
+    intersection covers more than ``min_overlap`` of either geometry."""
+    inter = sum(G.intersection_area(x, y) for x in a[0] for y in f[0])
+    return inter > 0 and (
+        (f[2] > 0 and inter / f[2] > min_overlap)
+        or (a[2] > 0 and inter / a[2] > min_overlap)
+    )
 
 
 def area_lookup_join(
@@ -114,7 +163,7 @@ def overlay_inference_sedona(
         .where(F.col(footprint_col).isNotNull())
         .withColumn("_ag", F.expr(f"ST_GeomFromWKT(`{footprint_col}`)"))
     )
-    lay = layer.select(
+    lay = layer.where(F.col(layer_name_col).isNotNull()).select(
         F.col(layer_name_col).cast("string").alias("_fname"),
         F.expr(f"ST_GeomFromWKT(`{layer_wkt_col}`)").alias("_fg"),
     )
@@ -140,20 +189,16 @@ def _bbox_prep(
     wkt_col: str,
     out_schema: str,
 ) -> DataFrame:
-    """Parse WKT per row → (key cols..., wkt, minx, miny, maxx, maxy, area).
+    """Parse WKT per row → (key cols..., wkt, minx, miny, maxx, maxy).
 
-    Pure-Python parse inside Arrow batches; rows with null/unparseable WKT
-    are dropped (same gate the closure-broadcast overlay applied).  Narrow
-    in, narrow out — geometry never leaves as anything but its WKT string,
-    so the downstream cell-join shuffles strings, not Python objects.
+    Pure-Python parse inside Arrow batches (``_shape``, memoised per task);
+    rows with null/unparseable WKT are dropped.  Narrow in, narrow out —
+    geometry never leaves as anything but its WKT string, so the
+    downstream cell-join shuffles strings, not Python objects.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # task-lifetime parse memo: zone grids / tile layers repeat a small
-        # vocabulary of WKT strings (the catalog fixture has 1.6 k distinct
-        # alert boxes over 15 k rows, 25 features), so keying the parse by
-        # the string cuts most of the per-row regex+float work
-        memo: dict[str, tuple | None] = {}
+        shape = _shape_memo()
         for pdf in batches:
             rows: list[tuple] = []
             wkts = pdf[wkt_col].tolist()
@@ -165,30 +210,10 @@ def _bbox_prep(
                 else [()] * len(wkts)
             )
             for key_tup, wkt_str in zip(keys, wkts):
-                if wkt_str is None or (
-                    isinstance(wkt_str, float) and pd.isna(wkt_str)
-                ):
-                    continue
-                hit = memo.get(wkt_str, False)
-                if hit is False:
-                    try:
-                        polys = _to_polys(wkt_str)
-                        box = G.merge_bboxes(
-                            [G.bbox(p[0]) for p in polys if p]
-                        )
-                        hit = (
-                            None
-                            if box is None
-                            else (*box, sum(G.polygon_area(p) for p in polys))
-                        )
-                    except ValueError:
-                        hit = None
-                    memo[wkt_str] = hit
-                if hit is None:
-                    continue
-                rows.append(key_tup + (wkt_str,) + hit)
-            cols = key_cols + [wkt_col, "_minx", "_miny", "_maxx", "_maxy",
-                               "_area"]
+                parsed = shape(wkt_str)
+                if parsed is not None:
+                    rows.append(key_tup + (wkt_str,) + parsed[1])
+            cols = key_cols + [wkt_col, "_minx", "_miny", "_maxx", "_maxy"]
             yield pd.DataFrame(rows, columns=cols)
 
     return df.select(*key_cols, wkt_col).mapInPandas(run, out_schema)
@@ -204,11 +229,15 @@ def overlay_inference(
     min_overlap: float = 0.05,
     use_sedona: bool | None = None,
 ) -> DataFrame:
-    """J5 + A1 — proportional-overlap spatial inference.
+    """J5 + A1 — proportional-overlap spatial inference, the catalog-scale
+    path: for footprint sets too large to ship in a task closure (the
+    catalog's 15 k alerts).  A caller that holds a small work set's
+    footprints on the driver uses ``overlay_footprints`` instead.
 
     For each alert footprint, collect the layer features whose intersection
     covers >``min_overlap`` of either geometry (the reference's 5% rule,
     ServiceAlertAugmenter.py:649-681), as a sorted array in ``out_col``.
+    Features with a null name name no zone.
 
     Fallback execution (no Sedona) is a **grid-keyed equi-join** — the
     layer is a full DataFrame participant, never collected to the driver:
@@ -217,7 +246,7 @@ def overlay_inference(
        zones are a pure function of the footprint, and real feeds repeat
        template geometries — every Python stage below runs once per
        distinct geometry, never per alert row);
-    2. both sides get WKT-parsed bbox+area columns via ``mapInPandas``
+    2. both sides get WKT-parsed bbox columns via ``mapInPandas``
        (``_bbox_prep`` — narrow, no shuffle);
     3. a uniform grid is sized from a one-row layer-extent aggregate
        (same ``sqrt(n)``-per-axis heuristic as ``geo.ops.GridIndex``,
@@ -231,18 +260,17 @@ def overlay_inference(
     5. a pair surviving the bbox-overlap filter is kept only in its
        **canonical cell** (the cell of the overlap region's min corner),
        so multi-cell pairs dedup without a ``distinct`` shuffle;
-    6. the exact Sutherland–Hodgman intersection + 5% rule runs per
-       joined pair in one Arrow-batched kernel, hits aggregate with
-       ``collect_set`` per footprint, and a final footprint-keyed join
-       maps zones back onto every alert row (broadcast when the distinct
-       geometry vocabulary is small).
+    6. the exact Sutherland–Hodgman intersection + 5% rule
+       (``_overlaps``) runs per joined pair in one Arrow-batched kernel,
+       hits aggregate with ``collect_set`` per footprint, and a final
+       footprint-keyed join maps zones back onto every alert row
+       (broadcast when the distinct geometry vocabulary is small).
 
-    This is the same candidate pruning the closure-broadcast version got
-    from ``geo.ops.GridIndex`` (and the reference from geopandas' R-tree,
-    ServiceAlertAugmenter.py:649-681), but expressed as data — a
-    country-scale layer shuffles instead of OOMing the driver.  With
-    Sedona present the ST_Intersects range join takes over wholesale
-    (``overlay_inference_sedona``).
+    This is the candidate pruning ``overlay_footprints`` gets from
+    ``geo.ops.GridIndex`` (and the reference from geopandas' R-tree,
+    ServiceAlertAugmenter.py:649-681), but expressed as data, so neither
+    side has to fit in a task.  With Sedona present the ST_Intersects range
+    join takes over wholesale (``overlay_inference_sedona``).
 
     Cost: the layer is scanned twice in the one plan (extent aggregate +
     join side); both scans are embarrassingly parallel and shuffle-free,
@@ -277,13 +305,13 @@ def overlay_inference(
         .distinct()
     )
 
+    # a feature without a name names no zone
     feats = _bbox_prep(
-        layer,
+        layer.where(F.col(layer_name_col).isNotNull()),
         [layer_name_col],
         layer_wkt_col,
         f"`{layer_name_col}` string, `{layer_wkt_col}` string, "
-        "_minx double, _miny double, _maxx double, _maxy double, "
-        "_area double",
+        "_minx double, _miny double, _maxx double, _maxy double",
     )
 
     # grid sizing: a one-row aggregate over the layer bboxes, cross-joined
@@ -340,14 +368,12 @@ def overlay_inference(
         [],
         footprint_col,
         f"`{footprint_col}` string, "
-        "_minx double, _miny double, _maxx double, _maxy double, "
-        "_area double",
+        "_minx double, _miny double, _maxx double, _maxy double",
     )
     a_cells = with_cells(aprep).select(
         footprint_col, "_cx", "_cy", "_gx", "_gy", "_sx", "_sy", "_na",
         F.col("_minx").alias("_aminx"), F.col("_miny").alias("_aminy"),
         F.col("_maxx").alias("_amaxx"), F.col("_maxy").alias("_amaxy"),
-        F.col("_area").alias("_aarea"),
     )
     f_cells = with_cells(feats).select(
         F.col(layer_name_col).alias("_fname"),
@@ -355,7 +381,6 @@ def overlay_inference(
         "_cx", "_cy",
         F.col("_minx").alias("_fminx"), F.col("_miny").alias("_fminy"),
         F.col("_maxx").alias("_fmaxx"), F.col("_maxy").alias("_fmaxy"),
-        F.col("_area").alias("_farea"),
     )
 
     pairs = (
@@ -375,70 +400,117 @@ def overlay_inference(
             & (F.col("_cy")
                == cell(F.greatest("_aminy", "_fminy"), "_gy", "_sy"))
         )
-        .select(footprint_col, "_aarea", "_fname", "_fwkt", "_farea")
+        .select(footprint_col, "_fname", "_fwkt")
     )
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # task-lifetime parse memo (same rationale as _bbox_prep): a pair
-        # stream repeats each feature WKT once per candidate footprint and
-        # each footprint WKT once per candidate feature — parse each
-        # distinct string once per task instead of once per pair.  No
-        # pair-level memo any more: the canonical-cell rule + the
-        # distinct-footprint collapse guarantee each (footprint, feature)
-        # pair reaches this kernel exactly once, so the r15 intersection
-        # memo could never hit and was pure dict overhead.
-        memo: dict[str, list | None] = {}
-
-        def polys_of(wkt_str):
-            hit = memo.get(wkt_str, False)
-            if hit is False:
-                try:
-                    hit = _to_polys(wkt_str)
-                except ValueError:
-                    hit = None
-                memo[wkt_str] = hit
-            return hit
-
+        # the canonical-cell rule + the distinct-footprint collapse bring
+        # each (footprint, feature) pair here exactly once; the parse memo
+        # serves the strings the pair stream repeats
+        shape = _shape_memo()
         for pdf in batches:
             fps, names = [], []
-            for awkt, aarea, fname, fwkt, farea in zip(
-                pdf[footprint_col].tolist(),
-                pdf["_aarea"].tolist(), pdf["_fname"].tolist(),
-                pdf["_fwkt"].tolist(), pdf["_farea"].tolist(),
+            for awkt, fname, fwkt in zip(
+                pdf[footprint_col].tolist(), pdf["_fname"].tolist(),
+                pdf["_fwkt"].tolist(),
             ):
-                fp = polys_of(awkt)
-                fpolys = polys_of(fwkt)
-                if fp is None or fpolys is None:
-                    continue
-                inter = 0.0
-                for a in fp:
-                    for b in fpolys:
-                        inter += G.intersection_area(a, b)
-                if inter <= 0:
-                    continue
-                if (farea > 0 and inter / farea > min_overlap) or (
-                    aarea > 0 and inter / aarea > min_overlap
-                ):
+                if _overlaps(shape(awkt), shape(fwkt), min_overlap):
                     fps.append(awkt)
                     names.append(str(fname))
-            yield pd.DataFrame(
-                {
-                    footprint_col: pd.Series(fps, dtype="object"),
-                    "_hit": pd.Series(names, dtype="object"),
-                }
-            )
+            yield _hits_frame(footprint_col, fps, names)
 
-    hits = pairs.mapInPandas(
-        score, f"`{footprint_col}` string, _hit string"
+    # map-back: one equality join on the footprint string — the zones
+    # frame is distinct-geometry-sized, so AQE broadcasts it when small;
+    # alerts with null/unparseable footprints never match and keep null
+    # zones
+    return alerts.join(
+        _zones(pairs, score, footprint_col, out_col), footprint_col, "left"
     )
-    inferred = hits.groupBy(footprint_col).agg(
+
+
+def overlay_footprints(
+    alerts: DataFrame,
+    footprints: Iterable[str | None],
+    layer: DataFrame,
+    out_col: str,
+    footprint_col: str = "geospatial_footprint",
+    layer_name_col: str = "name",
+    layer_wkt_col: str = "WKT",
+    min_overlap: float = 0.05,
+) -> DataFrame:
+    """J5 + A1 for a work set whose footprints the caller already holds on
+    the driver: the augmenter's ≤ ``DATA_SIZE_LIMIT`` admitted alerts, which
+    the reference overlays in memory (ServiceAlertAugmenter.py:649-681).
+
+    ``footprints`` are the values of ``alerts[footprint_col]``.  Their
+    distinct strings ride in the task closure, and the layer streams past
+    them in one ``mapInPandas`` over ``(name, WKT)``: a ``geo.ops.GridIndex``
+    over the footprint bboxes gives each feature its candidates, and the
+    bbox filter plus the kernel ``overlay_inference`` uses (``_overlaps``)
+    keep the hits.  Hits aggregate to a sorted ``collect_set`` per
+    footprint, broadcast-joined back onto ``alerts``.  The layer stays a
+    plan participant, never collected, so building the DataFrame launches
+    no job and a country-scale layer streams like any scan.  No footprint
+    gives a null ``out_col`` and no Spark work at all.
+
+    ``overlay_inference`` is the path for footprint sets too large to ship
+    in a closure (the catalog's 15 k alerts).
+    """
+    distinct = sorted({fp for fp in footprints if isinstance(fp, str)})
+    if not distinct:
+        return alerts.withColumn(out_col, F.lit(None).cast("array<string>"))
+
+    def stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        shaped = [(fp, s) for fp in distinct if (s := _shape(fp)) is not None]
+        index = G.GridIndex([s[1] for _, s in shaped])
+        for pdf in batches:
+            fps, names = [], []
+            for fname, fwkt in zip(
+                pdf["_fname"].tolist(), pdf["_fwkt"].tolist()
+            ):
+                f = _shape(fwkt)
+                if f is None:
+                    continue
+                for i in index.candidates(f[1]):
+                    fp, a = shaped[i]
+                    if G.bboxes_overlap(a[1], f[1]) and _overlaps(
+                        a, f, min_overlap
+                    ):
+                        fps.append(fp)
+                        names.append(str(fname))
+            yield _hits_frame(footprint_col, fps, names)
+
+    features = layer.where(F.col(layer_name_col).isNotNull()).select(
+        F.col(layer_name_col).alias("_fname"),
+        F.col(layer_wkt_col).alias("_fwkt"),
+    )
+    return alerts.join(
+        F.broadcast(_zones(features, stream, footprint_col, out_col)),
+        footprint_col,
+        "left",
+    )
+
+
+def _hits_frame(
+    footprint_col: str, fps: list[str], names: list[str]
+) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            footprint_col: pd.Series(fps, dtype="object"),
+            "_hit": pd.Series(names, dtype="object"),
+        }
+    )
+
+
+def _zones(
+    df: DataFrame, kernel, footprint_col: str, out_col: str
+) -> DataFrame:
+    """Footprint → sorted zone array, from a kernel that yields one
+    ``(footprint, _hit)`` row per overlapping feature."""
+    hits = df.mapInPandas(kernel, f"`{footprint_col}` string, _hit string")
+    return hits.groupBy(footprint_col).agg(
         F.sort_array(F.collect_set("_hit")).alias(out_col)
     )
-    # map-back: one equality join on the footprint string — the inferred
-    # frame is distinct-geometry-sized, so AQE broadcasts it when small;
-    # alerts with null/unparseable footprints never match and keep the
-    # null zones the row-level gate produced before
-    return alerts.join(inferred, footprint_col, "left")
 
 
 def excluded_area_type(area_type: pd.Series) -> pd.Series:

@@ -11,7 +11,8 @@ reference runs it: one pass that enriches each admitted alert once
    polygon, else the geocode tail (X3) or the LLM location suggestions
    (X2) + geocode waterfall; none for excluded area types (P9);
 3. toot derivation (J3 hashtag map + F16 concat);
-4. overlay inference of suburbs/wards (J5 + A1) and map-image links (X4);
+4. overlay inference of suburbs/wards (J5 + A1): the layer streams past the
+   work set's footprints in one pass per layer; map-image links (X4);
 5. union with the untouched cache and return the new gold DataFrame.
 
 External services are injected (LLM clients, geocoder) and called serially
@@ -60,7 +61,7 @@ from service_alerts_connector_spark.operators.joins import map_lookup
 from service_alerts_connector_spark.operators.spatial import (
     area_lookup_join,
     excluded_area_type,
-    overlay_inference,
+    overlay_footprints,
 )
 
 # Hashtag per service area (J3; reference ServiceAlertAugmenter.py:52-62 —
@@ -167,9 +168,10 @@ def augment(
         T.StructField(c, T.StringType())
         for c in ("tweet_text", "geospatial_footprint") if c not in names
     ])
-    work = spark.createDataFrame(
-        frame.reindex(columns=schema.fieldNames()), schema
-    )
+    frame = frame.reindex(columns=schema.fieldNames())
+    # one partition: the broadcast overlay joins keep the input's slicing,
+    # and gold's file count follows it
+    work = spark.createDataFrame(frame, schema).coalesce(1)
 
     # 3 — toot derivation (J3 + F16)
     work = work.withColumn(
@@ -179,15 +181,18 @@ def augment(
             map_lookup(F.col("service_area"), SERVICE_AREA_HASHTAGS),
         ),
     )
-    # 4 — overlay inference of suburbs / wards (J5 + A1), content-addressed
-    # map-image links (X4 cache keys; rendering is an edge side effect
-    # driven separately via images.missing_images)
+    # 4 — overlay inference of suburbs / wards (J5 + A1) over the
+    # footprints already on the driver, content-addressed map-image links
+    # (X4 cache keys; rendering is an edge side effect driven separately
+    # via images.missing_images)
     for layer, col in (
         (suburb_layer, "inferred_suburbs"),
         (ward_layer, "inferred_wards"),
     ):
         if layer is not None:
-            work = overlay_inference(work.drop(col), layer, col)
+            work = overlay_footprints(
+                work.drop(col), frame["geospatial_footprint"], layer, col
+            )
         elif col not in work.columns:
             work = work.withColumn(col, F.lit(None).cast("array<string>"))
     work = with_image_links(work.drop("image_filename"))

@@ -9,18 +9,30 @@ directory convention any object store / HDFS path supports:
     <root>/<dataset>/current  -> newest version  (re-written pointer dir)
 
 Retention is pure path management on the driver (tiny listings — never data
-jobs).  On a lakehouse deployment the same API would be backed by Delta time
-travel + VACUUM instead; the interface is deliberately storage-agnostic.
+jobs).  Each version also holds ``_schema.json``, the schema its data files
+were written with (partition columns excluded), written after the write
+commits and copied into ``current/`` with it.  Reads pass it to the parquet
+reader, which then has no footer to read for schema inference: a read
+launches no Spark job.  A version without the file (written before the
+sidecar existed, or torn between commit and sidecar) is read by inference.
+Spark's readers and ``dataset_files`` skip ``_``-prefixed files.
+
+On a lakehouse deployment the same API would be backed by Delta time travel
++ VACUUM instead; the interface is deliberately storage-agnostic.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 from datetime import datetime, timezone
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+SCHEMA_FILE = "_schema.json"
 
 
 def _dataset_root(root: str, dataset: str) -> Path:
@@ -105,6 +117,14 @@ def write_dataset(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(str(version_path))
+    # partition columns come back from the directory names, typed as
+    # inference types them, so the sidecar holds the data columns only
+    data_schema = StructType(
+        [f for f in df.schema.fields if f.name not in (partition_by or ())]
+    )
+    tmp = version_path / (SCHEMA_FILE + ".tmp")
+    tmp.write_text(data_schema.json())
+    os.replace(tmp, version_path / SCHEMA_FILE)
 
     versions = list_versions(root, dataset)
     for stale in versions[:-prune] if prune else []:
@@ -131,17 +151,24 @@ def write_dataset(
 def read_dataset(
     spark: SparkSession, root: str, dataset: str, version: str | None = None
 ) -> DataFrame:
-    """S2 — read the latest (or a pinned) version of a dataset."""
+    """S2 — read the latest (or a pinned) version of a dataset; with the
+    version's schema sidecar this launches no Spark job."""
     base = _dataset_root(root, dataset)
     if version is not None:
-        return spark.read.parquet(str(base / "versions" / version))
-    current = base / "current"
-    if current.exists():
-        return spark.read.parquet(str(current))
-    versions = list_versions(root, dataset)
-    if not versions:
-        raise FileNotFoundError(f"no versions of {dataset} under {root}")
-    return spark.read.parquet(str(base / "versions" / versions[-1]))
+        path = base / "versions" / version
+    elif (base / "current").exists():
+        path = base / "current"
+    else:
+        versions = list_versions(root, dataset)
+        if not versions:
+            raise FileNotFoundError(f"no versions of {dataset} under {root}")
+        path = base / "versions" / versions[-1]
+    reader = spark.read
+    if (path / SCHEMA_FILE).exists():
+        reader = reader.schema(
+            StructType.fromJson(json.loads((path / SCHEMA_FILE).read_text()))
+        )
+    return reader.parquet(str(path))
 
 
 def dataset_files(root: str, dataset: str, version: str | None = None) -> int:

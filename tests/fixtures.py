@@ -166,6 +166,17 @@ def jobs_launched(spark, fn) -> int:
     return scheduler.numTotalJobs() - before
 
 
+def unscannable_layer(spark):
+    """A (name, WKT) layer whose scan fails the job, to show that a plan
+    does no Spark work on it."""
+
+    def fail(batches):
+        raise RuntimeError("layer scanned")
+        yield  # pragma: no cover
+
+    return spark.range(1).mapInPandas(fail, "name string, WKT string")
+
+
 # Service doubles that log one line per call to a file: clients are pickled
 # into Python workers, so an in-memory counter would see no worker call.
 @dataclass(frozen=True)

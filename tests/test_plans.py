@@ -19,6 +19,7 @@ from service_alerts_connector_spark.plans.emailer import (
     pending_emails,
     send_pending,
 )
+from service_alerts_connector_spark.operators.spatial import overlay_inference
 from service_alerts_connector_spark.plans.recon import recon
 from service_alerts_connector_spark.schemas import RAW_SCHEMA
 from service_alerts_connector_spark.plans.fixer import fix_alerts
@@ -32,6 +33,7 @@ from tests.fixtures import (
     CountingLLM,
     calls,
     jobs_launched,
+    unscannable_layer,
 )
 
 
@@ -216,15 +218,82 @@ def test_augment_calls_each_service_once_per_alert(spark, tmp_path, waterfall):
 def test_augment_job_counts_and_nothing_cached(spark, tmp_path):
     """Building the gold DataFrame launches the work-set collect only, and
     writing it runs the Spark tail (toot, overlays, image links, merge);
-    nothing stays persisted.  The join-back plan launched 4 + 19."""
+    nothing stays persisted.  The join-back plan launched 4 + 19, and the
+    grid-join overlay of the work set 2 + 13."""
     kw = _city(spark, tmp_path)
     persisted = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     built = {}
     assert jobs_launched(spark, lambda: built.update(gold=augment(**kw))) == 2
     assert jobs_launched(
         spark, lambda: built["gold"].write.parquet(str(tmp_path / "gold"))
-    ) == 13
+    ) == 5
     assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == persisted
+
+
+def test_gold_plan_overlays_work_set_in_one_layer_pass(spark, tmp_path):
+    """Gold's plan keeps both parquet layers as scans, has no grid-cell
+    join (no ``_cx``/``_cy`` keys), and one ``MapInPandas`` per layer."""
+    kw = _city(spark, tmp_path)
+    for name in ("suburb_layer", "ward_layer"):
+        kw[name].write.parquet(str(tmp_path / name))
+        kw[name] = spark.read.parquet(str(tmp_path / name))
+    plan = augment(**kw)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ReadSchema: struct<name:string,WKT:string>") == 2
+    assert "_cx" not in plan and "_cy" not in plan
+    assert plan.count("MapInPandas") == 2
+
+
+def test_augment_rerun_job_counts_and_no_layer_work(spark, tmp_path):
+    """A rerun over the augmenter's own gold with nothing changed has an
+    empty work set: the work-set and backfill collects build it (6 jobs),
+    the write takes 2, and neither layer is scanned.  The grid-join
+    overlay of the work set read 6 + 6 or 6 + 7."""
+    kw = _city(spark, tmp_path)
+    augment(**kw).write.parquet(str(tmp_path / "gold1"))
+    kw.update(
+        previous_gold=spark.read.parquet(str(tmp_path / "gold1")),
+        suburb_layer=unscannable_layer(spark),
+        ward_layer=unscannable_layer(spark),
+    )
+    built = {}
+    assert jobs_launched(spark, lambda: built.update(gold=augment(**kw))) == 6
+    assert jobs_launched(
+        spark, lambda: built["gold"].write.parquet(str(tmp_path / "gold2"))
+    ) == 2
+    assert spark.read.parquet(str(tmp_path / "gold2")).count() == 4
+
+
+def test_augment_unbounded_work_set_zones_equal_overlay_inference(
+    spark, tmp_path
+):
+    """A seed run (``data_size_limit=None``) sends every footprint of its
+    work set past the layers in one pass each; the zones equal those of
+    the grid-join overlay over the same footprints."""
+    kw = _city(spark, tmp_path)
+    raw = [
+        dict(RAW_ALERTS[0], Id=30000 + i, _ingest_seq=i,
+             Address_x0020_Location_x0020_2=f"{i} Main Road")
+        for i in range(150)
+    ]
+    kw["silver"] = fix_alerts(spark.createDataFrame(raw, RAW_SCHEMA))
+    kw["config"] = AugmenterConfig(data_size_limit=None)
+    gold = augment(**kw).select(
+        "Id", "geospatial_footprint", "inferred_suburbs", "inferred_wards"
+    )
+    rows = gold.collect()
+    assert len({r["geospatial_footprint"] for r in rows}) > 100
+    for layer, col in (
+        (kw["suburb_layer"], "inferred_suburbs"),
+        (kw["ward_layer"], "inferred_wards"),
+    ):
+        reference = overlay_inference(
+            gold.select("Id", "geospatial_footprint"), layer, col,
+            use_sedona=False,
+        )
+        assert {r["Id"]: r[col] for r in rows} == {
+            r["Id"]: r[col] for r in reference.collect()
+        }
+    assert any(len(r["inferred_suburbs"] or ()) > 1 for r in rows)
 
 
 def test_augment_backfills_unfinished_cached_rows(spark, tmp_path):

@@ -8,8 +8,10 @@ from service_alerts_connector_spark.operators.spatial import (
     area_lookup_join,
     excluded_area_type,
     fuzzy_street_match,
+    overlay_footprints,
     overlay_inference,
 )
+from tests.fixtures import unscannable_layer
 
 # two adjacent 1°×1° suburbs and one far away
 SUBURBS = [
@@ -179,3 +181,70 @@ def test_overlay_empty_layer_zones_are_null(spark, tmp_path):
     assert {r["Id"]: r["zones"] for r in out.collect()} == {
         1: None, 2: None, 3: None,
     }
+
+
+# every geometry kind the parse accepts, the ones it rejects, a footprint
+# that only touches a feature along an edge, and a repeated footprint
+PARITY_ALERTS = [
+    (1, "POLYGON ((0.4 0.2, 1.6 0.2, 1.6 0.8, 0.4 0.8, 0.4 0.2))"),
+    (2, "MULTIPOLYGON (((0.1 0.1, 0.5 0.1, 0.5 0.5, 0.1 0.5, 0.1 0.1)), "
+        "((50.2 50.2, 50.6 50.2, 50.6 50.6, 50.2 50.6, 50.2 50.2)))"),
+    (3, "POINT (1.5 0.5)"),
+    (4, "LINESTRING (0.2 0.5, 0.8 0.5)"),
+    (5, "POLYGON ((2 0, 3 0, 3 1, 2 1, 2 0))"),  # shares SALT RIVER's edge
+    (6, "POLYGON ((0.2 0.2, 0.8 0.2, 0.5 0.9, 0.2 0.2))"),  # clip path
+    (7, "NOT WKT"),
+    (8, "LINESTRING EMPTY"),
+    (9, None),
+    (10, "POLYGON ((0.4 0.2, 1.6 0.2, 1.6 0.8, 0.4 0.8, 0.4 0.2))"),
+]
+PARITY_LAYER = SUBURBS + [
+    (None, "POLYGON ((0 0, 0.5 0, 0.5 0.5, 0 0.5, 0 0))"),
+    ("BROKEN", "NOT WKT"),
+    ("NO GEOMETRY", None),
+]
+
+
+def _zones(df, col="zones"):
+    return {r["Id"]: r[col] for r in df.collect()}
+
+
+def test_overlay_footprints_equals_overlay_inference(spark):
+    """Both overlay paths share the parse and the 5% rule: equal zones over
+    every footprint kind, an edge-touching pair, a null feature name (it
+    names no zone; both paths once reported it as "None"), unparseable
+    geometry on either side, and an empty layer."""
+    alerts = spark.createDataFrame(
+        PARITY_ALERTS, "Id long, geospatial_footprint string"
+    )
+    fps = [fp for _, fp in PARITY_ALERTS]
+    for layer in (
+        spark.createDataFrame(PARITY_LAYER, "name string, WKT string"),
+        spark.createDataFrame([], "name string, WKT string"),
+    ):
+        got = _zones(overlay_footprints(alerts, fps, layer, "zones"))
+        assert got == _zones(
+            overlay_inference(alerts, layer, "zones", use_sedona=False)
+        )
+    assert got == dict.fromkeys(range(1, 11))  # the empty layer
+    full = _zones(overlay_footprints(
+        alerts, fps,
+        spark.createDataFrame(PARITY_LAYER, "name string, WKT string"),
+        "zones",
+    ))
+    assert full[1] == full[10] == ["OBSERVATORY", "SALT RIVER"]
+    assert full[5] is None  # edge contact has no area
+    assert full[7] is full[8] is full[9] is None
+
+
+def test_overlay_footprints_without_footprints_touches_no_layer(spark):
+    """No footprint: a null array<string> column and no Spark work on the
+    layer, whose scan would fail the job."""
+    alerts = spark.createDataFrame(
+        [(1, None), (2, None)], "Id long, geospatial_footprint string"
+    )
+    out = overlay_footprints(
+        alerts, [None, None], unscannable_layer(spark), "zones"
+    )
+    assert dict(out.dtypes)["zones"] == "array<string>"
+    assert _zones(out) == {1: None, 2: None}
