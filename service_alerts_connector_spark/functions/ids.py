@@ -6,7 +6,7 @@ single-process batch, but nondeterministic in a distributed engine where a
 retried task would mint different values (SURVEY §7(d)).  The engine's rule:
 
 * *time* is pinned once per batch on the driver and passed in as a literal
-  (see ``broadcast_feeds(now=...)``, ``run_micro_batch(now=...)``);
+  (see ``feed_columns(gold, now, ...)``, ``run_micro_batch(now=...)``);
 * *identifiers* are content-derived — UUID-shaped sha256 of the business
   key, so retries and re-runs mint the same id.
 """

@@ -3,11 +3,12 @@
 The reference enumerates 24 feed configs = {all, 7days, current} ×
 {planned, unplanned} × {v0, v1, v1.1, v1.2} in Python lists
 (ServiceAlertBroadcaster.py:51-59) and loops them.  The engine keeps the
-configs as *data*.  ``feed_records`` serves every config from one
-projection of gold — the planned flag, one boolean per time window and one
-rendered JSON record per API version — collected in a single Spark job; the
-per-feed filters then run on the driver.  ``feed_dataframe`` is the
-per-config plan those feeds must equal.
+configs as *data*.  ``feed_columns`` is one projection that serves every
+config: one boolean per time window and one rendered JSON record per API
+version, selected beside gold's columns in the pipeline's one collect of
+gold (``plans.pipeline``); ``feed_records`` then filters each feed from
+those rows on the driver.  ``feed_dataframe`` is the per-config plan those
+feeds must equal.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from service_alerts_connector_spark.schemas import API_VERSION_COLS
@@ -94,44 +95,67 @@ def feed_dataframe(
     )
 
 
-def feed_records(
+FLAGS_COL = "_feed_flags"
+RECORDS_COL = "_feed_records"
+
+
+def feed_columns(
     gold: DataFrame, now: datetime, configs: list[FeedConfig]
-) -> dict[FeedConfig, list[str]]:
-    """Every config's feed as rendered JSON records (``json_record``), from
-    one collect of gold.  Each list keeps gold's collect order, so its
-    ``json_array`` equals ``dataframe_to_json_records(feed_dataframe(gold,
-    cfg, now))``.
+) -> list[Column]:
+    """The projection every config's feed is served from: a struct of
+    per-window booleans (``FLAGS_COL``) and a struct of per-version JSON
+    records rendered by ``json_record`` (``RECORDS_COL``), each field
+    named after its window or version.  Select them beside gold's columns,
+    collect once and pass the rows to ``feed_records``.
 
     The ``all`` flag is ``expiry_date IS NOT NULL``: every non-null expiry
     is above ``time_window_predicate``'s min(expiry) − 1 day anchor and a
     null one compares false.  With no expiry at all that predicate is
-    ``lit(True)``, so the ``all`` feeds then keep every row.
+    ``lit(True)``; ``feed_records`` then keeps every row in the ``all``
+    feeds.
     """
-    windows = list(dict.fromkeys(c.window for c in configs))
-    versions = list(dict.fromkeys(c.version for c in configs))
+    windows = dict.fromkeys(c.window for c in configs)
+    versions = dict.fromkeys(c.version for c in configs)
     flags = [
-        F.col("expiry_date").isNotNull()
-        if w == "all"
-        else F.coalesce(time_window_predicate(gold, w, now), F.lit(False))
+        (
+            F.col("expiry_date").isNotNull()
+            if w == "all"
+            else F.coalesce(time_window_predicate(gold, w, now), F.lit(False))
+        ).alias(w)
         for w in windows
     ]
     renders = [
-        json_record([c for c in API_VERSION_COLS[v] if c in gold.columns])
+        json_record([c for c in API_VERSION_COLS[v] if c in gold.columns]).alias(v)
         for v in versions
     ]
-    rows = gold.select(
-        "planned",
-        F.array(*flags).alias("flags"),
-        F.array(*renders).alias("records"),
-    ).collect()
-    in_window = {w: [r["flags"][i] for r in rows] for i, w in enumerate(windows)}
+    return [
+        F.struct(*flags).alias(FLAGS_COL),
+        F.struct(*renders).alias(RECORDS_COL),
+    ]
+
+
+def feed_records(
+    rows: list[Row], configs: list[FeedConfig]
+) -> dict[FeedConfig, list[str]]:
+    """Every config's feed as rendered JSON records, filtered on the driver
+    from collected rows that carry ``feed_columns`` and gold's ``planned``.
+    Each list keeps the rows' order, so for rows collected from gold its
+    ``json_array`` equals ``dataframe_to_json_records(feed_dataframe(gold,
+    cfg, now))``.
+    """
+    flags = [r[FLAGS_COL] for r in rows]
+    records = [r[RECORDS_COL] for r in rows]
+    planned = [r["planned"] for r in rows]
+    in_window = {
+        w: [f[w] for f in flags] for w in dict.fromkeys(c.window for c in configs)
+    }
     if "all" in in_window and not any(in_window["all"]):
         in_window["all"] = [True] * len(rows)
     return {
         cfg: [
-            r["records"][versions.index(cfg.version)]
-            for r, keep in zip(rows, in_window[cfg.window])
-            if keep and r["planned"] == cfg.planned
+            rec[cfg.version]
+            for rec, p, keep in zip(records, planned, in_window[cfg.window])
+            if keep and p == cfg.planned
         ]
         for cfg in configs
     }

@@ -1,37 +1,29 @@
 """The Broadcaster — gold → 24 versioned JSON feeds (SURVEY §3.3).
 
-One collect of gold renders every feed (``operators.feeds.feed_records``);
-the files are written from the driver.  The recon CDC hop consumes the same
-gold snapshot (plans/recon.py).
+The feeds are filtered on the driver (``operators.feeds.feed_records``)
+from rows of the pipeline's one collect of gold, which carry every feed's
+window flags and rendered records (``operators.feeds.feed_columns``); the
+files are written from the driver.  Recon and the emailer read the same
+rows (plans/pipeline.py).
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
-from pyspark.sql import DataFrame
+from pyspark.sql import Row
 
 from service_alerts_connector_spark.operators.feeds import (
-    FeedConfig,
     all_feed_configs,
     feed_records,
 )
 from service_alerts_connector_spark.sources.json_feed import write_feed
 
 
-def broadcast_feeds(
-    gold: DataFrame,
-    out_root: str,
-    now: datetime | None = None,
-    configs: list[FeedConfig] | None = None,
-) -> dict[str, int]:
-    """Write every feed; returns {feed path: row count} for observability.
-
-    The whole fan-out is one Spark job: gold is collected once, and the row
-    counts are the lengths of the driver-side feeds.
+def broadcast_feeds(rows: list[Row], out_root: str) -> dict[str, int]:
+    """Write every feed from collected gold rows that carry
+    ``feed_columns(gold, now, all_feed_configs())``; returns {feed path:
+    row count} for observability.  Launches no Spark job.
     """
-    now = now or datetime.now(timezone.utc).replace(tzinfo=None)
-    feeds = feed_records(gold, now, configs or all_feed_configs())
+    feeds = feed_records(rows, all_feed_configs())
     written: dict[str, int] = {}
     for cfg, records in feeds.items():
         write_feed(records, out_root, cfg.path)

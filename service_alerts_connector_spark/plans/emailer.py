@@ -11,12 +11,15 @@ pandas ``query()`` strings and curried row predicates
 * P7 — the ward/service-area curried predicates become parameterized
   expression builders (``array_contains`` — no UDF).
 
-Fan-out: every config's predicate is evaluated in one projection of gold
-(``pending_emails``), so gold is read once for any number of configs.
-Sent-dedup (ST6): a delivery-log anti-join on the deterministic email key
-replaces the reference's object-listing probe — set-based, idempotent.
-Compose (X5) renders Jinja2 HTML per row on the driver (volumes are tens of
-rows/batch by construction); transport is injectable and stubbed in tests.
+Fan-out: every config's predicate and both delivery keys are evaluated in
+Spark, in one array column (``email_matches``) of the pipeline's one
+collect of gold, so gold is read once for any number of configs.  The rest
+runs on the driver, as in the reference (ServiceAlertEmailer.py:793-826):
+``pending_emails`` drops matches whose deterministic key is in the sent
+log's collected key set (ST6) — set-based, idempotent — in place of the
+reference's object-listing probe.  Compose (X5) renders Jinja2 HTML per
+record (volumes are tens of rows/batch by construction); transport is
+injectable and stubbed in tests.
 """
 
 from __future__ import annotations
@@ -24,7 +27,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from service_alerts_connector_spark.constants import ID_COL
@@ -124,40 +127,17 @@ def legacy_email_key(config_name: Column) -> Column:
     )
 
 
-def _anti_join_sent(fanned: DataFrame, sent_log: DataFrame) -> DataFrame:
-    """Drop rows already delivered under EITHER key form.
-
-    The sent log stores one key column; a migrated log may hold legacy
-    (status-less) keys, so two consecutive left_anti joins on the same key
-    set cover both — same shape the reference gets from its two
-    list_objects probes (ServiceAlertEmailer.py:800-811)."""
-    sent_keys = sent_log.select("email_key")
-    return fanned.join(sent_keys, "email_key", "left_anti").join(
-        sent_keys.withColumnRenamed("email_key", "legacy_email_key"),
-        "legacy_email_key",
-        "left_anti",
-    )
+MATCHES_COL = "_email_matches"
 
 
-def pending_emails(
-    gold: DataFrame,
-    configs: list[EmailConfig],
-    sent_log: DataFrame | None = None,
-    previous_snapshot: DataFrame | None = None,
-) -> DataFrame:
-    """Fan out gold through every config predicate and anti-join the sent
-    log.  Output: one row per (config, alert) still to send — gold's
-    columns plus ``config_name``, ``recipients`` and both delivery keys.
-
-    One projection evaluates every config: each row carries an array with
-    one ``(config_name, recipients)`` struct per config whose predicate
-    holds (null where it does not or is null, as ``where`` drops it), and
-    the non-null elements are exploded.  Gold is scanned once and the plan
-    is the same size whatever the config count.
-
-    With ``previous_snapshot`` (the recon snapshot before this run), rows
-    whose Id it holds carry ``_is_update`` → the "Updated Service Alert"
-    subject."""
+def email_matches(configs: list[EmailConfig]) -> Column:
+    """Every config's match for a gold row, in one array column
+    (``MATCHES_COL``): one ``(config_name, recipients, email_key,
+    legacy_email_key)`` struct per config whose predicate holds.  A config
+    whose predicate is false or null (``where`` drops the row) contributes
+    no element.  Select it beside gold's columns and pass the collected
+    rows to ``pending_emails``: gold is read once and the plan is the same
+    size whatever the config count."""
     matches = F.array(
         *[
             F.when(
@@ -172,24 +152,51 @@ def pending_emails(
             for cfg in configs
         ]
     )
-    fanned = gold.select(
-        "*", F.inline(F.filter(matches, lambda m: m.isNotNull()))
-    ).withColumns(
-        {
-            "email_key": email_key(F.col("config_name")),
-            "legacy_email_key": legacy_email_key(F.col("config_name")),
-        }
-    )
-    if sent_log is not None:
-        fanned = _anti_join_sent(fanned, sent_log)
-    if previous_snapshot is not None:
-        prev_ids = previous_snapshot.select(
-            F.col(ID_COL), F.lit(True).alias("_is_update")
-        ).distinct()
-        fanned = fanned.join(prev_ids, ID_COL, "left").withColumn(
-            "_is_update", F.coalesce(F.col("_is_update"), F.lit(False))
-        )
-    return fanned
+    # keyed per kept match: each config adds one struct to the plan, not
+    # two sha2 expressions (at 101 configs those made the collect 1.7x slower)
+    return F.transform(
+        F.filter(matches, lambda m: m.isNotNull()),
+        lambda m: m.withField(
+            "email_key", email_key(m["config_name"])
+        ).withField("legacy_email_key", legacy_email_key(m["config_name"])),
+    ).alias(MATCHES_COL)
+
+
+def pending_emails(
+    rows: list[Row],
+    columns: list[str],
+    sent_keys: set[str] = frozenset(),
+    previous_ids: set[int] = frozenset(),
+) -> list[dict]:
+    """One record per (config, alert) still to send, from collected gold
+    rows that carry ``email_matches``.  A record holds the gold
+    ``columns``, ``config_name``, ``recipients``, ``email_key``,
+    ``legacy_email_key`` and ``_is_update``, in that order: the order the
+    HTML lists fields in.
+
+    Sent-dedup (ST6): a match is dropped when EITHER of its keys is in
+    ``sent_keys``, the sent log's key column.  A migrated log may hold
+    legacy (status-less) keys, so both forms are checked — the reference
+    makes the same two object-store probes (ServiceAlertEmailer.py:800-811).
+
+    ``_is_update`` holds when the previous recon snapshot holds the row's
+    Id (``previous_ids``) → the "Updated Service Alert" subject."""
+    pending = []
+    for r in rows:
+        for m in r[MATCHES_COL]:
+            if m["email_key"] in sent_keys or m["legacy_email_key"] in sent_keys:
+                continue
+            rec = {c: r[c] for c in columns}
+            rec.update(
+                config_name=m["config_name"],
+                recipients=m["recipients"],
+                email_key=m["email_key"],
+                legacy_email_key=m["legacy_email_key"],
+            )
+            # a null Id matches no snapshot Id, as under join semantics
+            rec["_is_update"] = r[ID_COL] is not None and r[ID_COL] in previous_ids
+            pending.append(rec)
+    return pending
 
 
 def email_subject(rec: dict) -> str:
@@ -229,23 +236,29 @@ def render_email_html(rec: dict) -> str:
 Transport = Callable[[tuple[str, ...], str, str], None]  # (to, subject, html)
 
 
+SENT_LOG_SCHEMA = "email_key string, config_name string, Id long"
+
+
 def send_pending(
-    pending: DataFrame,
+    spark: SparkSession,
+    pending: list[dict],
     transport: Transport,
     archive_root: str | None = None,
 ) -> DataFrame:
     """Render + send every pending email; returns the new sent-log rows
-    (email_key, config_name, Id).  Collect is intentional: by construction
-    (incremental cap upstream) this is ≤ tens of rows per batch — the
-    side-effecting edge, not a data-scale operator.
+    (email_key, config_name, Id), typed and empty when nothing was sent.
+    The records are on the driver already: by construction (incremental
+    cap upstream) this is ≤ tens of rows per batch — the side-effecting
+    edge, not a data-scale operator.  The log rows are built from a pandas
+    frame, which takes the session's Arrow path.
 
     ``archive_root`` archives each rendered HTML under its delivery key
     (reference S11: a copy of every sent email lands in the object store,
     ServiceAlertEmailer.py:820-826)."""
-    rows = pending.collect()
+    import pandas as pd
+
     sent = []
-    for r in rows:
-        rec = r.asDict()
+    for rec in pending:
         html = render_email_html(rec)
         transport(tuple(rec["recipients"]), email_subject(rec), html)
         if archive_root is not None:
@@ -255,7 +268,13 @@ def send_pending(
             path.parent.mkdir(parents=True, exist_ok=True)
             path.write_text(html)
         sent.append((rec["email_key"], rec["config_name"], rec[ID_COL]))
-    spark = pending.sparkSession
-    return spark.createDataFrame(
-        sent or [], "email_key string, config_name string, Id long"
-    )
+    frame = pd.DataFrame(sent, columns=["email_key", "config_name", ID_COL])
+    return spark.createDataFrame(frame, SENT_LOG_SCHEMA)
+
+
+def merged_sent_log(sent_log: DataFrame | None, new_log: DataFrame) -> DataFrame:
+    """The sent log to commit: the previous log (if any) plus this run's
+    rows, one row per key.  ``distinct`` over a single-partition child
+    needs no shuffle: one job, one file."""
+    merged = new_log if sent_log is None else sent_log.unionByName(new_log)
+    return merged.coalesce(1).distinct()

@@ -11,6 +11,16 @@ runs:
 
 State datasets (all versioned parquet under ``state_root``): silver, gold,
 CDC snapshot, sent-email log.
+
+The sinks read one collect of gold, which carries every feed's flags and
+renders and every email config's matches beside gold's columns, plus the
+previous snapshot's (Id, status) pairs and, when emailing, the sent log's
+keys.  The driver thus holds every live alert of the city on each batch:
+all of gold's columns when feeds, recon objects or emails are written,
+only Id and status otherwise.  The feeds, recon's diff and the email fan-out then run on the
+driver over those rows, as the reference's broadcaster, recon Lambda and
+emailer do in memory.  Both state commits are shuffle-free ``distinct``s
+over one partition.
 """
 
 from __future__ import annotations
@@ -23,7 +33,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from service_alerts_connector_spark.constants import (
     AUGMENTED_DATASET,
+    ID_COL,
     SANITISED_DATASET,
+)
+from service_alerts_connector_spark.operators.feeds import (
+    all_feed_configs,
+    feed_columns,
 )
 from service_alerts_connector_spark.plans.augmenter import (
     AugmenterConfig,
@@ -32,11 +47,17 @@ from service_alerts_connector_spark.plans.augmenter import (
 from service_alerts_connector_spark.plans.broadcaster import broadcast_feeds
 from service_alerts_connector_spark.plans.emailer import (
     EmailConfig,
+    email_matches,
+    merged_sent_log,
     pending_emails,
     send_pending,
 )
 from service_alerts_connector_spark.plans.fixer import fix_alerts
-from service_alerts_connector_spark.plans.recon import Notifier, recon
+from service_alerts_connector_spark.plans.recon import (
+    Notifier,
+    recon,
+    snapshot,
+)
 from service_alerts_connector_spark.sources.parquet_io import (
     read_dataset,
     write_dataset,
@@ -97,36 +118,60 @@ def run_micro_batch(
     write_dataset(gold, state_root, AUGMENTED_DATASET)
     gold = read_dataset(spark, state_root, AUGMENTED_DATASET)
 
+    # the sinks' one collect of gold: every feed's window flags and
+    # rendered records, every email config's matches, and gold's columns
+    # where the feed filter, recon's objects or the emails read them
+    # (recon's diff alone reads Id and status)
+    emailing = sinks.email_transport is not None and bool(sinks.email_configs)
+    full = sinks.feeds_root is not None or sinks.recon_root is not None or emailing
+    extra = []
+    if sinks.feeds_root is not None:
+        extra += feed_columns(gold, now, all_feed_configs())
+    if emailing:
+        extra.append(email_matches(sinks.email_configs))
+    rows = gold.select(*(["*"] if full else [ID_COL, "status"]), *extra).collect()
+
     # broadcast the 24 feeds
     if sinks.feeds_root is not None:
-        broadcast_feeds(gold, sinks.feeds_root, now=now)
+        broadcast_feeds(rows, sinks.feeds_root)
 
-    # recon CDC + notification
+    # recon CDC + notification, against the previous snapshot's pairs
     prev_snapshot = _try_read(spark, state_root, SNAPSHOT_DATASET)
-    rr = recon(
-        gold,
-        prev_snapshot,
+    previous = (
+        set()
+        if prev_snapshot is None
+        else set(map(tuple, prev_snapshot.select(ID_COL, "status").collect()))
+    )
+    recon(
+        rows,
+        gold.columns,
+        previous,
         out_root=sinks.recon_root,
         notifier=sinks.notifier,
     )
 
     # email fan-out with durable sent-log (ST6); alerts whose Id existed in
     # the previous snapshot are updates → "Updated Service Alert" subject
-    if sinks.email_transport is not None and sinks.email_configs:
+    if emailing:
         sent_log = _try_read(spark, state_root, SENTLOG_DATASET)
-        pending = pending_emails(
-            gold, sinks.email_configs, sent_log, prev_snapshot
-        )
-        new_log = send_pending(pending, sinks.email_transport)
-        merged_log = (
-            new_log
+        sent_keys = (
+            set()
             if sent_log is None
-            else sent_log.unionByName(new_log).distinct()
+            else {r[0] for r in sent_log.select("email_key").collect()}
         )
-        write_dataset(merged_log, state_root, SENTLOG_DATASET)
+        pending = pending_emails(
+            rows, gold.columns, sent_keys, {i for i, _ in previous}
+        )
+        new_log = send_pending(spark, pending, sinks.email_transport)
+        write_dataset(
+            merged_sent_log(sent_log, new_log), state_root, SENTLOG_DATASET
+        )
 
-    # snapshot write happens LAST: the email join reads prev_snapshot
-    # lazily, so its backing files must survive until the sends are done
-    write_dataset(rr.new_snapshot, state_root, SNAPSHOT_DATASET)
+    # the snapshot commits LAST, after the sent log: a crash between the
+    # two commits leaves the old snapshot, so the next batch re-delivers
+    # recon's objects and notifications (at least once) while the sent log
+    # already holds this batch's emails; the other order would resend them
+    # as updates
+    write_dataset(snapshot(gold), state_root, SNAPSHOT_DATASET)
 
     return gold

@@ -5,9 +5,11 @@ snapshot of (Id, status) pairs, writes one JSON object per changed alert per
 API version, publishes an SNS notification for brand-new Ids, and persists
 the new snapshot (alerts-recon.py:16-115).
 
-Engine shape: a pure function of (current gold, previous snapshot) →
-(changed rows, new snapshot), with sinks injected — runs identically inside
-a ``foreachBatch`` (streaming/runner.py) or a batch job.
+Engine shape: as in the reference, the diff runs in memory.  ``recon`` is a
+driver-side function of (collected gold rows, previous snapshot pairs) →
+changed rows and notified Ids, with sinks injected; the pipeline reads the
+rows from its one collect of gold and the pairs from one collect of the
+previous snapshot, and commits ``snapshot(gold)`` as the next one.
 """
 
 from __future__ import annotations
@@ -15,11 +17,9 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Row
 
 from service_alerts_connector_spark.constants import ID_COL
-from service_alerts_connector_spark.operators.dedup import snapshot_diff
 from service_alerts_connector_spark.sources.json_feed import (
     write_per_alert_objects,
 )
@@ -38,58 +38,53 @@ Notifier = Callable[[list[int]], None]
 
 @dataclass
 class ReconResult:
-    changed: DataFrame          # rows whose (Id, status) pair is new
-    new_snapshot: DataFrame     # (Id, status) pairs to persist for next run
+    changed: list[Row]          # rows whose (Id, status) pair is new
     notified_ids: list[int]     # brand-new alert Ids sent to the notifier
 
 
+def snapshot(gold: DataFrame) -> DataFrame:
+    """The (Id, status) pairs to persist for the next run.  ``distinct``
+    over a single-partition child needs no shuffle: one job, one file."""
+    return gold.select(ID_COL, "status").coalesce(1).distinct()
+
+
 def recon(
-    gold: DataFrame,
-    previous_snapshot: DataFrame | None,
+    rows: list[Row],
+    columns: list[str],
+    previous_pairs: set[tuple],
     out_root: str | None = None,
     notifier: Notifier | None = None,
-    status_col: str = "status",
 ) -> ReconResult:
     """J8 snapshot diff → per-alert JSON objects (S8) + notification (S9).
 
-    The changed rows are collected once, each flagged ``_is_new`` when its
-    Id is absent from the previous snapshot; both sinks read that one
-    collect.
+    ``rows`` are collected gold rows, ``columns`` the gold columns an
+    object holds (it lists Id and status first), and ``previous_pairs``
+    the previous snapshot's (Id, status) pairs (empty on the first run).
+    A row is changed when its pair is not in the previous snapshot; as
+    under SQL join semantics, a row with a null Id or a null status never
+    is.  A changed row is brand-new when the previous snapshot holds its
+    Id under no status: that is the SNS set (status-only changes are
+    delivered but not notified — recon.py:83-95).
     """
-    current = gold.select(ID_COL, status_col).distinct()
-    changed_keys = snapshot_diff(current, previous_snapshot, [ID_COL, status_col])
-    changed = gold.join(changed_keys, [ID_COL, status_col], "left_semi")
-
-    # brand-new = Id absent entirely from the previous snapshot (the SNS set;
-    # status-only changes are delivered but not notified — recon.py:83-95).
-    # The snapshot may hold several statuses per Id: its Ids are made
-    # distinct so the left join cannot duplicate a changed row.  Broadcast
-    # by plan, not by AQE: left to AQE, whether the changed rows get
-    # shuffled by Id depends on which side finishes first, so the job
-    # count varied from run to run.
-    if previous_snapshot is None:
-        flagged = changed.withColumn("_is_new", F.lit(True))
-    else:
-        seen = previous_snapshot.select(ID_COL).distinct().withColumn(
-            "_seen", F.lit(True)
-        )
-        flagged = changed.join(F.broadcast(seen), ID_COL, "left").select(
-            *changed.columns, F.col("_seen").isNull().alias("_is_new")
-        )
-    rows = flagged.collect()
-    notified = sorted({r[ID_COL] for r in rows if r["_is_new"]})
+    seen = {i for i, _ in previous_pairs}
+    changed = [
+        r
+        for r in rows
+        if r[ID_COL] is not None
+        and r["status"] is not None
+        and (r[ID_COL], r["status"]) not in previous_pairs
+    ]
+    notified = sorted({r[ID_COL] for r in changed if r[ID_COL] not in seen})
 
     if out_root is not None:
         write_per_alert_objects(
-            rows,
-            changed.columns,
+            changed,
+            [ID_COL, "status"]
+            + [c for c in columns if c not in (ID_COL, "status")],
             out_root,
             VERSION_DROPS,
             id_col=ID_COL,
-            status_col=status_col,
         )
     if notifier is not None and notified:
         notifier(notified)
-    return ReconResult(
-        changed=changed, new_snapshot=current, notified_ids=notified
-    )
+    return ReconResult(changed=changed, notified_ids=notified)

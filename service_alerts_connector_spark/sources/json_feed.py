@@ -6,9 +6,11 @@ hop, one JSON object per alert per API version (alerts-recon.py:50-81).
 
 Feed volumes are small (these are serving artifacts, not data lakes), so the
 engine renders rows JVM-side with ``to_json(struct(*))`` — null keys dropped,
-ISO timestamps — and materializes the array on the driver.  The heavy lifting
-(filter/project) stayed distributed; only the final tiny byte-string is
-driver-side, exactly where an object-store PUT has to happen anyway.
+ISO timestamps — and brings them to the driver in the pipeline's one collect
+of gold, beside the per-window flags.  The per-feed filters and the array
+assembly then run on the driver over rows bounded by the city's live
+alerts, as the reference's broadcaster filters in memory, and the files are
+written there, exactly where an object-store PUT has to happen anyway.
 """
 
 from __future__ import annotations

@@ -10,6 +10,7 @@ import pytest
 from service_alerts_connector_spark.operators.feeds import (
     FeedConfig,
     all_feed_configs,
+    feed_columns,
     feed_dataframe,
 )
 from service_alerts_connector_spark.plans.broadcaster import broadcast_feeds
@@ -35,6 +36,11 @@ SCHEMA = "Id long, planned boolean, expiry_date timestamp, status string, tweet_
 
 def _gold(spark):
     return spark.createDataFrame(GOLD_ROWS, SCHEMA)
+
+
+def _feed_rows(gold):
+    """Gold's rows with every feed's flags and renders, collected once."""
+    return gold.select("*", *feed_columns(gold, NOW, all_feed_configs())).collect()
 
 
 def test_config_matrix_is_24():
@@ -88,15 +94,15 @@ GOLDS = {
 
 @pytest.mark.parametrize("variant", sorted(GOLDS))
 def test_broadcast_feeds_equals_per_config_reference(spark, tmp_path, variant):
-    """broadcast_feeds (one collect of gold) writes every feed byte for byte
-    as the per-config plan feed_dataframe + dataframe_to_json_records."""
+    """broadcast_feeds over one collect of gold writes every feed byte for
+    byte as the per-config plan feed_dataframe + dataframe_to_json_records."""
     rows = [
         {"inferred_wards": None, "image_filename": None, **r}
         for r in GOLDS[variant]
     ]
     spark.createDataFrame(rows, WIDE_SCHEMA).write.parquet(str(tmp_path / "gold"))
     gold = spark.read.parquet(str(tmp_path / "gold"))
-    counts = broadcast_feeds(gold, str(tmp_path / "feeds"), now=NOW)
+    counts = broadcast_feeds(_feed_rows(gold), str(tmp_path / "feeds"))
     assert sorted(counts) == sorted(c.path for c in all_feed_configs())
     for cfg in all_feed_configs():
         want = dataframe_to_json_records(feed_dataframe(gold, cfg, NOW))
@@ -144,22 +150,33 @@ def test_json_records_shape(spark):
 
 def test_broadcast_feeds_is_one_job(spark, tmp_path):
     # per-config plans took 89 jobs here: a count and a collect per feed,
-    # plus a min(expiry_date) anchor per 'all' feed
+    # plus a min(expiry_date) anchor per 'all' feed.  The one job is the
+    # collect of gold; broadcast_feeds itself runs on the driver
     _gold(spark).write.parquet(str(tmp_path / "gold"))
     gold = spark.read.parquet(str(tmp_path / "gold"))
     out = str(tmp_path / "feeds")
-    assert jobs_launched(spark, lambda: broadcast_feeds(gold, out, now=NOW)) == 1
+    got = {}
+    assert jobs_launched(spark, lambda: got.update(rows=_feed_rows(gold))) == 1
+    assert jobs_launched(spark, lambda: broadcast_feeds(got["rows"], out)) == 0
 
 
 def test_recon_job_count(spark, tmp_path):
     # 15 jobs when the notified Ids and the per-alert objects were two
-    # separate collects; 8 with one collect of the flagged changed rows
-    from service_alerts_connector_spark.plans.recon import recon
+    # separate collects, 8 with one collect of the flagged changed rows;
+    # the diff now runs on the driver over collected rows and pairs, and
+    # the next snapshot commits in one shuffle-free job
+    from service_alerts_connector_spark.plans.recon import recon, snapshot
 
     gold = spark.createDataFrame(
         [(1, "Open", "a"), (2, "Closed", "b"), (3, "Open", "c")],
         "Id long, status string, title string",
     )
-    prev = spark.createDataFrame([(1, "Open"), (2, "Open")], "Id long, status string")
-    run = lambda: recon(gold, prev, out_root=str(tmp_path), notifier=lambda ids: None)
-    assert jobs_launched(spark, run) == 8
+    rows = gold.collect()
+    prev = {(1, "Open"), (2, "Open")}
+    run = lambda: recon(
+        rows, gold.columns, prev, out_root=str(tmp_path), notifier=lambda ids: None
+    )
+    assert jobs_launched(spark, run) == 0
+    write = lambda: snapshot(gold).write.parquet(str(tmp_path / "snapshot"))
+    assert jobs_launched(spark, write) == 1
+    assert len(list((tmp_path / "snapshot").glob("part-*"))) == 1

@@ -15,15 +15,21 @@ from service_alerts_connector_spark.streaming.runner import (
     run_available_now,
     stream_raw_alerts,
 )
-from tests.fixtures import RAW_ALERTS
+from tests.fixtures import RAW_ALERTS, jobs_launched
 
 NOW = datetime(2024, 2, 14, 12, 0)
 
 
+def _persisted(spark) -> set[int]:
+    """Ids of the RDDs the session holds persisted.  The session is shared
+    across the suite: another module's cache may live, and the context
+    cleaner may release it at any time, so the checks below ask that no
+    new id appears rather than that the count stays put."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 def test_two_microbatch_pipeline(spark, tmp_path):
-    # session is shared across the test suite: measure cache hygiene as a
-    # delta, not an absolute (another module's cache may legitimately live)
-    n_cached_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    cached_before = _persisted(spark)
     staged = tmp_path / "staged"
     staged.mkdir()
     with open(staged / "p1.jsonl", "w") as f:
@@ -52,10 +58,12 @@ def test_two_microbatch_pipeline(spark, tmp_path):
         ],
     )
 
+    batch_jobs: list[int] = []
+
     def batch_fn(bdf, bid):
-        run_micro_batch(
+        batch_jobs.append(jobs_launched(spark, lambda: run_micro_batch(
             bdf, str(tmp_path / "lake"), sinks=sinks, now=NOW
-        )
+        )))
 
     stream = stream_raw_alerts(spark, str(staged), max_files_per_trigger=1)
     run_available_now(stream, batch_fn, str(tmp_path / "ckpt"))
@@ -94,10 +102,13 @@ def test_two_microbatch_pipeline(spark, tmp_path):
     assert subjects[0].startswith("Service Alert:")  # first sight
     assert subjects[1].startswith("Updated Service Alert:")  # status change
 
+    # the second batch's jobs: 24 when recon, the email fan-out and both
+    # state commits each ran their own joins and shuffles; now the sinks
+    # read one collect of gold and two state collects
+    assert batch_jobs[1] == 13
     # cache hygiene: the email fan-out reads gold once and caches nothing —
     # the two-batch run must not leave any extra DataFrame pinned
-    n_cached_after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert n_cached_after <= n_cached_before
+    assert not _persisted(spark) - cached_before
 
 
 def test_email_run_subjects_and_nothing_cached(spark, tmp_path):
@@ -108,7 +119,7 @@ def test_email_run_subjects_and_nothing_cached(spark, tmp_path):
         read_sharepoint,
     )
 
-    n_cached_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    cached_before = _persisted(spark)
     outbox: list[str] = []
     sinks = PipelineSinks(
         email_transport=lambda to, s, h: outbox.append(s),
@@ -133,8 +144,7 @@ def test_email_run_subjects_and_nothing_cached(spark, tmp_path):
         now=NOW,
     )
     assert outbox == ["Service Alert: Water Off", "Updated Service Alert: Water Off"]
-    n_cached_after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert n_cached_after - n_cached_before == 0
+    assert not _persisted(spark) - cached_before
 
 
 def test_feeds_only_run_leaves_nothing_cached(spark, tmp_path):
@@ -143,7 +153,7 @@ def test_feeds_only_run_leaves_nothing_cached(spark, tmp_path):
         read_sharepoint,
     )
 
-    n_cached_before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    cached_before = _persisted(spark)
     bronze = read_sharepoint(spark, lambda: RAW_ALERTS[:3])
     run_micro_batch(
         bronze,
@@ -152,8 +162,32 @@ def test_feeds_only_run_leaves_nothing_cached(spark, tmp_path):
         now=NOW,
     )
     assert len(list((tmp_path / "feeds").rglob("*.json"))) == 24
-    n_cached_after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert n_cached_after == n_cached_before
+    assert not _persisted(spark) - cached_before
+
+
+def test_notifier_only_runs_notify_new_ids_once(spark, tmp_path):
+    """With neither recon objects nor emails, the sinks collect only Id and
+    status of gold; the diff still notifies each new Id once, and a status
+    change notifies nothing."""
+    from service_alerts_connector_spark.sources.sharepoint import (
+        read_sharepoint,
+    )
+
+    notified: list[int] = []
+    sinks = PipelineSinks(notifier=notified.extend)
+    lake = str(tmp_path / "lake")
+    run_micro_batch(
+        read_sharepoint(spark, lambda: RAW_ALERTS[:3]), lake, sinks=sinks, now=NOW
+    )
+    assert notified == [23121, 23122, 23123]
+    updated = dict(RAW_ALERTS[0], Status12="Issue Resolved")
+    run_micro_batch(
+        read_sharepoint(spark, lambda: [updated], ingest_seq_start=100),
+        lake,
+        sinks=sinks,
+        now=NOW,
+    )
+    assert notified == [23121, 23122, 23123]
 
 
 def test_streaming_sharepoint_source_equals_batch_run(spark, tmp_path):

@@ -14,13 +14,16 @@ from service_alerts_connector_spark.plans.augmenter import (
 )
 from service_alerts_connector_spark.plans.emailer import (
     EXAMPLE_EMAIL_CONFIGS,
+    EmailConfig,
     email_key,
+    email_matches,
     legacy_email_key,
+    merged_sent_log,
     pending_emails,
     send_pending,
 )
 from service_alerts_connector_spark.operators.spatial import overlay_inference
-from service_alerts_connector_spark.plans.recon import recon
+from service_alerts_connector_spark.plans.recon import recon, snapshot
 from service_alerts_connector_spark.schemas import RAW_SCHEMA
 from service_alerts_connector_spark.plans.fixer import fix_alerts
 from service_alerts_connector_spark.sources.multimodal import (
@@ -329,6 +332,16 @@ def test_augment_backfills_unfinished_cached_rows(spark, tmp_path):
             assert r == old
 
 
+def _pending(gold, configs, sent_keys=frozenset(), previous_ids=frozenset()):
+    """The pipeline's email step over one collect of gold."""
+    rows = gold.select("*", email_matches(configs)).collect()
+    return pending_emails(rows, gold.columns, sent_keys, previous_ids)
+
+
+def _keys(log):
+    return [r["email_key"] for r in log.collect()]
+
+
 def test_emailer_fanout_and_sent_dedup(spark):
     gold = spark.createDataFrame(
         [
@@ -342,8 +355,8 @@ def test_emailer_fanout_and_sent_dedup(spark):
         "Id long, service_area string, title string, status string, planned boolean, "
         "area_type string, inferred_suburbs array<string>, inferred_wards array<string>",
     )
-    pending = pending_emails(gold, EXAMPLE_EMAIL_CONFIGS)
-    got = {(r["config_name"], r["Id"]) for r in pending.collect()}
+    pending = _pending(gold, EXAMPLE_EMAIL_CONFIGS)
+    got = {(r["config_name"], r["Id"]) for r in pending}
     assert ("grassy-park-watch", 1) in got  # P6 rlike hit
     assert ("ward-57-unplanned", 2) in got  # P7 ward + planned=False
     assert ("water-planned", 1) in got  # P7 service area + planned=True
@@ -351,10 +364,12 @@ def test_emailer_fanout_and_sent_dedup(spark):
     assert ("grassy-park-watch", 3) not in got  # Citywide excluded by P6
 
     outbox = []
-    sent_log = send_pending(pending, lambda to, subj, html: outbox.append((to, subj)))
-    assert len(outbox) == pending.count()
+    sent_log = send_pending(
+        spark, pending, lambda to, subj, html: outbox.append((to, subj))
+    )
+    assert len(outbox) == len(pending)
     # second pass with the sent log → nothing pending (ST6 idempotence)
-    assert pending_emails(gold, EXAMPLE_EMAIL_CONFIGS, sent_log).count() == 0
+    assert _pending(gold, EXAMPLE_EMAIL_CONFIGS, set(_keys(sent_log))) == []
 
 
 def test_emailer_legacy_sent_key_fallback(spark):
@@ -370,25 +385,26 @@ def test_emailer_legacy_sent_key_fallback(spark):
         "area_type string, inferred_suburbs array<string>, inferred_wards array<string>",
     )
     # a log holding alert 1's LEGACY key only (as a migrated store would)
-    legacy_log = (
+    legacy_log = set(_keys(
         gold.where("Id = 1")
         .select(legacy_email_key(F.lit("water-planned")).alias("email_key"))
-    )
-    pending = pending_emails(gold, EXAMPLE_EMAIL_CONFIGS, legacy_log)
-    got = {(r["config_name"], r["Id"]) for r in pending.collect()}
+    ))
+    pending = _pending(gold, EXAMPLE_EMAIL_CONFIGS, legacy_log)
+    got = {(r["config_name"], r["Id"]) for r in pending}
     assert ("water-planned", 1) not in got  # deduped via legacy key
     assert ("water-planned", 2) in got  # untouched alert still pending
     # mixed log: legacy key for 1 + current (status-aware) key for 2
     outbox = []
-    mixed = legacy_log.unionByName(
+    mixed = legacy_log | set(_keys(
         send_pending(
-            pending.where("Id = 2 and config_name = 'water-planned'"),
+            spark,
+            [r for r in pending if (r["config_name"], r["Id"]) == ("water-planned", 2)],
             lambda to, subj, html: outbox.append(subj),
-        ).select("email_key")
-    )
+        )
+    ))
     left = {
         (r["config_name"], r["Id"])
-        for r in pending_emails(gold, EXAMPLE_EMAIL_CONFIGS, mixed).collect()
+        for r in _pending(gold, EXAMPLE_EMAIL_CONFIGS, mixed)
     }
     assert ("water-planned", 1) not in left and ("water-planned", 2) not in left
 
@@ -397,10 +413,6 @@ EMAIL_GOLD_SCHEMA = (
     "Id long, service_area string, title string, status string, planned boolean, "
     "area_type string, inferred_suburbs array<string>, inferred_wards array<string>"
 )
-
-
-def _rows(df):
-    return sorted(repr(r) for r in df.collect())
 
 
 def test_pending_emails_equals_per_config_reference(spark):
@@ -421,7 +433,7 @@ def test_pending_emails_equals_per_config_reference(spark):
         ],
         EMAIL_GOLD_SCHEMA,
     )
-    pending = pending_emails(gold, EXAMPLE_EMAIL_CONFIGS)
+    pending = _pending(gold, EXAMPLE_EMAIL_CONFIGS, previous_ids={2, 6})
     reference = [
         gold.where(cfg.predicate())
         .withColumn("config_name", F.lit(cfg.name))
@@ -430,18 +442,28 @@ def test_pending_emails_equals_per_config_reference(spark):
         .withColumn("legacy_email_key", legacy_email_key(F.lit(cfg.name)))
         for cfg in EXAMPLE_EMAIL_CONFIGS
     ]
-    assert pending.columns == reference[0].columns
-    want = sorted(r for df in reference for r in _rows(df))
-    assert _rows(pending) == want
-    assert {(r["config_name"], r["Id"]) for r in pending.collect()} >= {
+    # the HTML lists fields in record order
+    assert {tuple(rec) for rec in pending} == {(*reference[0].columns, "_is_update")}
+    want = sorted(
+        repr(sorted(r.asDict().items())) for df in reference for r in df.collect()
+    )
+    got = sorted(
+        repr(sorted((k, v) for k, v in rec.items() if k != "_is_update"))
+        for rec in pending
+    )
+    assert got == want
+    assert {(r["config_name"], r["Id"]) for r in pending} >= {
         ("grassy-park-watch", 1), ("ward-57-unplanned", 1), ("water-planned", 2),
     }
+    assert {r["Id"] for r in pending if r["_is_update"]} == {2}
 
 
 def test_pending_emails_and_send_job_count(spark, tmp_path):
-    """Jobs the pipeline's email step launches: fan-out, sent-log anti-join,
-    update flag and send.  The per-config union over a cached gold, with
-    the update join in the pipeline, launched 8 here."""
+    """Jobs the pipeline's email step launches.  The DataFrame fan-out with
+    its two sent-log anti joins, the update join and the send launched 5
+    here (the per-config union over a cached gold, 8).  Now the matches
+    ride in one collect of gold, the fan-out and the send run on the
+    driver, and the sent log commits in one shuffle-free job."""
     gold_rows = [
         (1, "Water & Sanitation", "Leak", "Open", True, "Official Planning Suburb",
          ["grassy park"], ["57"]),
@@ -453,26 +475,79 @@ def test_pending_emails_and_send_job_count(spark, tmp_path):
         str(tmp_path / "gold")
     )
     gold = spark.read.parquet(str(tmp_path / "gold"))
+    got = {}
+    collect = lambda: got.update(
+        rows=gold.select("*", email_matches(EXAMPLE_EMAIL_CONFIGS)).collect()
+    )
+    assert jobs_launched(spark, collect) == 1
+    rows = got["rows"]
     sent = send_pending(
-        pending_emails(gold.where("Id = 3"), EXAMPLE_EMAIL_CONFIGS), lambda *a: None
+        spark,
+        pending_emails([r for r in rows if r["Id"] == 3], gold.columns),
+        lambda *a: None,
     )
     sent.write.parquet(str(tmp_path / "sent"))
-    spark.createDataFrame([(1, "Open"), (3, "Open")], "Id long, status string").write.parquet(
-        str(tmp_path / "snapshot")
-    )
     sent_log = spark.read.parquet(str(tmp_path / "sent"))
-    snapshot = spark.read.parquet(str(tmp_path / "snapshot"))
+    sent_keys = set(_keys(sent_log))
     outbox = []
 
     def run():
-        pending = pending_emails(gold, EXAMPLE_EMAIL_CONFIGS, sent_log, snapshot)
-        send_pending(pending, lambda to, subj, html: outbox.append(subj))
+        pending = pending_emails(rows, gold.columns, sent_keys, {1, 3})
+        got.update(
+            new_log=send_pending(
+                spark, pending, lambda to, subj, html: outbox.append(subj)
+            )
+        )
 
-    assert jobs_launched(spark, run) == 5
+    assert jobs_launched(spark, run) == 0
     assert sorted(outbox) == [
         "Service Alert: Fault", "Updated Service Alert: Leak",
         "Updated Service Alert: Leak",
     ]
+    commit = lambda: merged_sent_log(sent_log, got["new_log"]).write.parquet(
+        str(tmp_path / "sent2")
+    )
+    assert jobs_launched(spark, commit) == 1
+    assert len(list((tmp_path / "sent2").glob("part-*"))) == 1
+
+
+def test_send_nothing_gives_typed_empty_log(spark):
+    log = send_pending(spark, [], lambda *a: None)
+    assert log.schema.simpleString() == (
+        "struct<email_key:string,config_name:string,Id:bigint>"
+    )
+    assert log.collect() == []
+
+
+def test_sent_log_holds_each_key_once(spark, tmp_path):
+    """Two configs under one name, or gold holding one (Id, status) twice,
+    match one delivery key twice: every match is sent, and the committed
+    sent log holds the key once — with or without a previous log."""
+    gold = spark.createDataFrame(
+        [
+            (1, "Water & Sanitation", "Leak", "Open", True, None, None, ["57"]),
+            (2, "Electricity", "Fault", "Open", False, None, None, ["58"]),
+            (2, "Electricity", "Fault", "Open", False, None, None, ["58"]),
+        ],
+        EMAIL_GOLD_SCHEMA,
+    )
+    configs = [
+        EmailConfig(name="twin", recipients=("a@example.org",), ward="57"),
+        EmailConfig(name="twin", recipients=("b@example.org",), ward="57"),
+        EmailConfig(name="fault", recipients=("c@example.org",), ward="58"),
+    ]
+    outbox = []
+    new_log = send_pending(
+        spark, _pending(gold, configs), lambda to, subj, html: outbox.append(to)
+    )
+    assert sorted(outbox) == [
+        ("a@example.org",), ("b@example.org",),
+        ("c@example.org",), ("c@example.org",),
+    ]
+    previous = spark.createDataFrame([("k0", "old", 9)], new_log.schema)
+    for log in (None, previous):
+        keys = _keys(merged_sent_log(log, new_log))
+        assert len(keys) == len(set(keys)) == 2 + (log is not None)
 
 
 RECON_GOLD = [(1, "Open", "a"), (2, "Closed", "b"), (3, "Open", "c")]
@@ -482,21 +557,21 @@ def _recon_gold(spark):
     return spark.createDataFrame(RECON_GOLD, "Id long, status string, title string")
 
 
-def _snapshot(spark, pairs):
-    return spark.createDataFrame(pairs, "Id long, status string")
+def _recon(gold, previous, **sinks):
+    return recon(gold.collect(), gold.columns, previous, **sinks)
 
 
 def test_recon_cdc(spark, tmp_path):
     gold = _recon_gold(spark)
-    prev = _snapshot(spark, [(1, "Open"), (2, "Open")])
+    prev = {(1, "Open"), (2, "Open")}
     notifications = []
-    result = recon(gold, prev, out_root=str(tmp_path), notifier=notifications.extend)
-    changed = {r["Id"] for r in result.changed.collect()}
+    result = _recon(gold, prev, out_root=str(tmp_path), notifier=notifications.extend)
+    changed = {r["Id"] for r in result.changed}
     assert changed == {2, 3}  # 2 status-changed, 3 brand-new
     assert notifications == [3]  # only brand-new Ids notified
     assert (tmp_path / "v1.2" / "3.Open.json").exists()
     assert (tmp_path / "v1" / "2.Closed.json").exists()
-    assert result.new_snapshot.count() == 3
+    assert snapshot(gold).count() == 3
     # exact object bytes: gold's column order, one object per version
     objects = {
         str(f.relative_to(tmp_path)): f.read_text()
@@ -511,17 +586,15 @@ def test_recon_cdc(spark, tmp_path):
 
 def test_recon_first_run_notifies_every_id(spark, tmp_path):
     notifications = []
-    result = recon(
-        _recon_gold(spark), None, out_root=str(tmp_path),
+    result = _recon(
+        _recon_gold(spark), set(), out_root=str(tmp_path),
         notifier=notifications.extend,
     )
     assert notifications == result.notified_ids == [1, 2, 3]
     assert len(list(tmp_path.rglob("*.json"))) == 3 * len(RECON_GOLD)
 
 
-def test_recon_snapshot_with_two_statuses_per_id(spark, tmp_path, monkeypatch):
-    """An Id the snapshot holds under two statuses is neither written twice
-    (the new-Id join must not fan out) nor notified."""
+def _capture_objects(monkeypatch) -> list[str]:
     from service_alerts_connector_spark.plans import recon as recon_mod
 
     write = recon_mod.write_per_alert_objects
@@ -533,12 +606,45 @@ def test_recon_snapshot_with_two_statuses_per_id(spark, tmp_path, monkeypatch):
         return written
 
     monkeypatch.setattr(recon_mod, "write_per_alert_objects", capture)
-    prev = _snapshot(spark, [(1, "Open"), (2, "Open"), (2, "Pending")])
+    return paths
+
+
+def test_recon_snapshot_with_two_statuses_per_id(spark, tmp_path, monkeypatch):
+    """An Id the snapshot holds under two statuses is neither written twice
+    (the new-Id join must not fan out) nor notified."""
+    paths = _capture_objects(monkeypatch)
+    prev = {(1, "Open"), (2, "Open"), (2, "Pending")}
     notifications = []
-    recon(_recon_gold(spark), prev, out_root=str(tmp_path),
-          notifier=notifications.extend)
+    _recon(_recon_gold(spark), prev, out_root=str(tmp_path),
+           notifier=notifications.extend)
     assert notifications == [3]
     assert len(paths) == len(set(paths)) == 3 * 2  # Ids 2 and 3, 3 versions
+
+
+@pytest.mark.parametrize("first_run", [True, False])
+def test_recon_null_id_or_status_is_never_changed(
+    spark, tmp_path, monkeypatch, first_run
+):
+    """As under SQL join semantics, a gold row with a null Id or a null
+    status is neither written as an object nor notified, whether or not
+    the snapshot holds the same null pair."""
+    paths = _capture_objects(monkeypatch)
+    gold = spark.createDataFrame(
+        RECON_GOLD + [(None, "Open", "d"), (4, None, "e"), (5, "Open", "f")],
+        "Id long, status string, title string",
+    )
+    prev = set() if first_run else {(None, "Open"), (4, None), (5, None)}
+    notifications = []
+    result = _recon(gold, prev, out_root=str(tmp_path),
+                    notifier=notifications.extend)
+    changed = {r["Id"] for r in result.changed}
+    assert changed == {1, 2, 3, 5}
+    assert notifications == ([1, 2, 3, 5] if first_run else [1, 2, 3])
+    assert sorted(paths) == sorted(
+        str(tmp_path / v / f"{i}.{st}.json")
+        for v in ("v1", "v1.1", "v1.2")
+        for i, st in [(1, "Open"), (2, "Closed"), (3, "Open"), (5, "Open")]
+    )
 
 
 def test_multimodal_features_and_dedup(spark):

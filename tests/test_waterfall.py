@@ -8,6 +8,7 @@ from service_alerts_connector_spark.enrichment.geocode import (
 )
 from service_alerts_connector_spark.plans.emailer import (
     EmailConfig,
+    email_matches,
     pending_emails,
 )
 
@@ -71,17 +72,19 @@ def test_pending_emails_101_configs_one_projection(spark):
             planned=True,
         )
     ]
-    pending = pending_emails(gold, configs)
-    got = {(r["config_name"], r["Id"]) for r in pending.collect()}
+    projected = gold.select("*", email_matches(configs))
+    rows = projected.collect()
+    pending = pending_emails(rows, gold.columns)
+    got = {(r["config_name"], r["Id"]) for r in pending}
     assert got == {
         ("ward-57", 1), ("ward-58", 2),  # Citywide 3 excluded from ward streams
         ("water-planned", 1), ("water-planned", 3),
     }
     # one projection of one gold scan, whatever the config count
-    plan = pending._jdf.queryExecution().optimizedPlan()
+    plan = projected._jdf.queryExecution().optimizedPlan()
     assert "Union" not in plan.toString()
     assert plan.collectLeaves().size() == 1
 
-    # sent-log anti-join idempotence
-    sent = pending.select("email_key")
-    assert pending_emails(gold, configs, sent).count() == 0
+    # sent-log idempotence
+    sent = {r["email_key"] for r in pending}
+    assert pending_emails(rows, gold.columns, sent) == []
